@@ -460,14 +460,3 @@ def reproject_geometry(
             rings.append(np.column_stack([x, y]))
         polys.append(rings)
     return Geometry(geom.kind, polygons=polys)
-
-
-def geometry_to_geojson(geom: Geometry) -> str:
-    if geom.kind == "Point":
-        return json.dumps({"type": "Point", "coordinates": list(geom.points[0])})
-    if geom.kind == "MultiPoint":
-        return json.dumps({"type": "MultiPoint", "coordinates": geom.points.tolist()})
-    coords = [[r.tolist() for r in poly] for poly in geom.polygons]
-    if geom.kind == "Polygon":
-        return json.dumps({"type": "Polygon", "coordinates": coords[0]})
-    return json.dumps({"type": "MultiPolygon", "coordinates": coords})

@@ -11,7 +11,10 @@ inside Arrow pandas UDFs.
 Value model inside a compiled closure:
   - scalars (float/int/bool)
   - numpy arrays, canonical float64 with NaN as nodata (matching the
-    engine-wide tile decode; see core/tiles.decode_tile_float)
+    engine-wide batch tile decode; see core/tiles.decode_tiles_batch_float).
+    Operators call a closure once per row chunk, so pixel arrays carry
+    extra leading (row, band) axes; every process is elementwise or
+    reduces over axis 0 only.
   - "array" values: ndarray with the openEO array dimension on AXIS 0
     (a band list or a time stack), so reducers are axis-0 numpy calls.
 

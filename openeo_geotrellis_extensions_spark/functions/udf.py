@@ -21,7 +21,7 @@ import numpy as np
 import pandas as pd
 
 from ..core.celltype import parse_cell_type
-from ..core.tiles import decode_tile_float, encode_band
+from ..core.tiles import decode_tiles_batch_float, encode_tiles_batch
 from ..sources.datacube import DataCube, cube_schema
 
 
@@ -76,8 +76,8 @@ def run_udf(cube: DataCube, code: str, context: dict | None = None) -> DataCube:
         pdf = pdf.sort_values("time")
         col = int(pdf["col"].iloc[0])
         row = int(pdf["row"].iloc[0])
-        stack = np.stack(
-            [decode_tile_float(list(b), src_ct, shape) for b in pdf["bands"]]
+        stack = decode_tiles_batch_float(
+            pdf["bands"].tolist(), src_ct, shape, n_bands
         )  # (t, bands, y, x) — Udf.scala:124-131 dim order
         xc = XDataCube(
             stack,
@@ -92,15 +92,14 @@ def run_udf(cube: DataCube, code: str, context: dict | None = None) -> DataCube:
             arr = arr[None, None]
         elif arr.ndim == 3:  # (bands, y, x): time reduced
             arr = arr[None]
-        rows = []
-        for ti in range(arr.shape[0]):
-            bands = [
-                encode_band(out_ct.from_float_nan(arr[ti, b].astype(np.float64)), out_ct)
-                for b in range(arr.shape[1])
-            ]
-            t = pdf["time"].iloc[ti] if arr.shape[0] == len(pdf) else pdf["time"].iloc[0]
-            rows.append((t, col, row, bands))
-        return pd.DataFrame(rows, columns=["time", "col", "row", "bands"])
+        times = pdf["time"] if arr.shape[0] == len(pdf) else [pdf["time"].iloc[0]] * len(arr)
+        return pd.DataFrame(
+            [
+                (t, col, row, bands)
+                for t, bands in zip(times, encode_tiles_batch(arr, out_ct))
+            ],
+            columns=["time", "col", "row", "bands"],
+        )
 
     df = cube.df.groupBy("col", "row").applyInPandas(
         apply_chunk, schema=cube_schema(True)

@@ -20,7 +20,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from ..core.celltype import parse_cell_type
-from ..core.tiles import decode_tile_float, encode_band
+from ..core.tiles import decode_tiles_batch_float, decoded_chunks, encode_tiles_batch
 from ..functions.process_compiler import CompiledProcess, compile_process_graph
 from ..sources.datacube import DataCube, cube_schema
 
@@ -58,28 +58,15 @@ def apply_process(cube: DataCube, graph, context: dict | None = None) -> DataCub
     src_ct = cube.meta.cell_type
     shape = cube.meta.tile_shape
     out_ct = parse_cell_type(out_ct_name)
+    n_bands = cube.meta.n_bands
     schema = cube.df.schema
     ctx = context or {}
 
     def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out_bands = []
-            for bufs in pdf["bands"]:
-                stack = decode_tile_float(list(bufs), src_ct, shape)
-                res = [
-                    encode_band(
-                        out_ct.from_float_nan(
-                            np.asarray(
-                                comp.fn({"x": stack[b], **ctx}), dtype=np.float64
-                            )
-                        ).astype(out_ct.dtype),
-                        out_ct,
-                    )
-                    for b in range(stack.shape[0])
-                ]
-                out_bands.append(res)
+        for pdf, vals in decoded_chunks(it, src_ct, shape, n_bands):
+            res = np.asarray(comp.fn({"x": vals, **ctx}), dtype=np.float64)
             pdf = pdf.copy()
-            pdf["bands"] = out_bands
+            pdf["bands"] = encode_tiles_batch(np.broadcast_to(res, vals.shape), out_ct)
             yield pdf
 
     return DataCube(cube.df.mapInPandas(run, schema=schema), cube.meta).with_meta(
@@ -97,32 +84,48 @@ def reduce_bands(cube: DataCube, graph, context: dict | None = None) -> DataCube
     schema = cube.df.schema
     ctx = context or {}
     labels = list(cube.meta.band_names)
+    n_bands = cube.meta.n_bands
 
     def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out_bands = []
-            for bufs in pdf["bands"]:
-                stack = decode_tile_float(list(bufs), src_ct, shape)
-                res = comp.fn({"data": stack, "array_labels": labels, **ctx})
-                res_list = list(res) if isinstance(res, list) else [res]
-                out_bands.append(
-                    [
-                        encode_band(
-                            out_ct.from_float_nan(
-                                np.asarray(r, dtype=np.float64)
-                            ).astype(out_ct.dtype),
-                            out_ct,
-                        )
-                        for r in res_list
-                    ]
-                )
+        for pdf, vals in decoded_chunks(it, src_ct, shape, n_bands):
+            # band axis first: reducers work over axis 0
+            res = comp.fn(
+                {"data": vals.transpose(1, 0, 2, 3), "array_labels": labels, **ctx}
+            )
+            tile_shape = (len(pdf), *shape)
+            out = np.stack(
+                [
+                    np.broadcast_to(np.asarray(r, dtype=np.float64), tile_shape)
+                    for r in (res if isinstance(res, list) else [res])
+                ],
+                axis=1,
+            )
             pdf = pdf.copy()
-            pdf["bands"] = out_bands
+            pdf["bands"] = encode_tiles_batch(out, out_ct)
             yield pdf
 
     df = cube.df.mapInPandas(run, schema=schema)
     return DataCube(df, cube.meta).with_meta(
         cell_type=out_ct_name, band_names=("band0",)
+    )
+
+
+def _over_time(comp: CompiledProcess, stacks: np.ndarray, labels: list[str],
+               ctx: dict, res_shape: tuple) -> np.ndarray:
+    """Run the callback on each band's (T, h, w) time stack of a (T, B, h, w)
+    ``stacks``; results broadcast to ``res_shape`` and stack on axis -3."""
+    return np.stack(
+        [
+            np.broadcast_to(
+                np.asarray(
+                    comp.fn({"data": stacks[:, b], "array_labels": labels, **ctx}),
+                    dtype=np.float64,
+                ),
+                res_shape,
+            )
+            for b in range(stacks.shape[1])
+        ],
+        axis=-3,
     )
 
 
@@ -139,32 +142,19 @@ def _group_time_stacks(cube: DataCube, comp: CompiledProcess, out_ct_name: str,
         pdf = pdf.sort_values("time")  # sortBy(_._1.instant), OpenEOProcesses.scala:49
         col = int(pdf["col"].iloc[0])
         row = int(pdf["row"].iloc[0])
-        stacks = np.stack(
-            [decode_tile_float(list(b), src_ct, shape) for b in pdf["bands"]]
+        stacks = decode_tiles_batch_float(
+            pdf["bands"].tolist(), src_ct, shape, n_bands
         )  # (T, B, h, w)
         labels = [t.isoformat() for t in pdf["time"]]
-        per_band = []
-        for b in range(n_bands):
-            res = comp.fn({"data": stacks[:, b], "array_labels": labels, **ctx})
-            per_band.append(np.asarray(res, dtype=np.float64))
+        res_shape = (len(pdf), *shape) if keep_time else shape
+        # (T, B, h, w) when keeping time, else (B, h, w)
+        per_band = _over_time(comp, stacks, labels, ctx, res_shape)
         if keep_time:
-            rows = []
-            for ti in range(len(pdf)):
-                bands = [
-                    encode_band(
-                        out_ct.from_float_nan(per_band[b][ti]).astype(out_ct.dtype),
-                        out_ct,
-                    )
-                    for b in range(n_bands)
-                ]
-                rows.append((pdf["time"].iloc[ti], col, row, bands))
-            return pd.DataFrame(rows, columns=["time", "col", "row", "bands"])
-        bands = [
-            encode_band(
-                out_ct.from_float_nan(per_band[b]).astype(out_ct.dtype), out_ct
+            return pd.DataFrame(
+                {"time": pdf["time"].to_numpy(), "col": col, "row": row,
+                 "bands": encode_tiles_batch(per_band, out_ct)}
             )
-            for b in range(n_bands)
-        ]
+        bands = encode_tiles_batch(per_band[None], out_ct)[0]
         return pd.DataFrame([(col, row, bands)], columns=["col", "row", "bands"])
 
     return run

@@ -18,7 +18,12 @@ from pyspark.sql import functions as F
 
 from ..core.celltype import parse_cell_type
 from ..core.geom import parse_geometry, rasterize as raster_mask
-from ..core.tiles import decode_tile_float, encode_band
+from ..core.tiles import (
+    decode_tiles_batch_float,
+    decoded_chunks,
+    encode_tiles_batch,
+    merge_tiles,
+)
 from ..sources.datacube import DataCube
 from .kernel import apply_kernel
 from .mask import mask as mask_op
@@ -42,14 +47,11 @@ def to_scl_dilation_mask(
     out_ct = parse_cell_type("uint8ud255")
 
     def binarize(it):
-        for pdf in it:
-            out = []
-            for bufs in pdf["bands"]:
-                stack = decode_tile_float(list(bufs), src_ct, shape)
-                m = np.isin(stack[0], mask_values).astype(np.float64)
-                out.append([encode_band(out_ct.from_float_nan(m), out_ct)])
+        for pdf, vals in decoded_chunks(it, src_ct, shape, 1):
             res = pdf.copy()
-            res["bands"] = out
+            res["bands"] = encode_tiles_batch(
+                np.isin(vals, mask_values).astype(np.float64), out_ct
+            )
             yield res
 
     bin_cube = DataCube(
@@ -63,14 +65,11 @@ def to_scl_dilation_mask(
     conv_ct = conv.meta.cell_type
 
     def threshold(it):
-        for pdf in it:
-            out = []
-            for bufs in pdf["bands"]:
-                stack = decode_tile_float(list(bufs), conv_ct, shape)
-                m = (np.nan_to_num(stack[0], nan=0.0) > 0).astype(np.float64)
-                out.append([encode_band(out_ct.from_float_nan(m), out_ct)])
+        for pdf, vals in decoded_chunks(it, conv_ct, shape, 1):
             res = pdf.copy()
-            res["bands"] = out
+            res["bands"] = encode_tiles_batch(
+                (np.nan_to_num(vals, nan=0.0) > 0).astype(np.float64), out_ct
+            )
             yield res
 
     df = conv.df.mapInPandas(threshold, schema=conv.df.schema)
@@ -105,8 +104,8 @@ def chunk_polygon(
         # the xarray chunk contract of runChunkPolygonUserCode
         for (c, r), grp in pdf.groupby(["col", "row"]):
             grp = grp.sort_values("time")
-            stack = np.stack(
-                [decode_tile_float(list(b), ct, shape) for b in grp["bands"]]
+            stack = decode_tiles_batch_float(
+                grp["bands"].tolist(), ct, shape, n_bands
             )  # (T, bands, h, w)
             if mask_outside and not grp["contained"].iloc[0]:
                 xs, ys = layout.pixel_centers_for_key(int(c), int(r))
@@ -117,12 +116,8 @@ def chunk_polygon(
                 raise ValueError(
                     f"chunk fn must preserve shape {stack.shape}, got {res.shape}"
                 )
-            for ti, t in enumerate(grp["time"]):
-                bands = [
-                    encode_band(ct.from_float_nan(res[ti, b]), ct)
-                    for b in range(n_bands)
-                ]
-                rows.append((t, int(c), int(r), bands))
+            bands = encode_tiles_batch(res, ct)
+            rows += [(t, int(c), int(r), b) for t, b in zip(grp["time"], bands)]
         return pd.DataFrame(rows, columns=["time", "col", "row", "bands"])
 
     chunked = joined.groupBy("feature_index").applyInPandas(
@@ -130,19 +125,15 @@ def chunk_polygon(
     )
 
     # merge duplicate keys from overlapping polygons: first non-nodata wins
-    def merge_tiles(pdf: pd.DataFrame) -> pd.DataFrame:
+    def merge_key(pdf: pd.DataFrame) -> pd.DataFrame:
         first = pdf.iloc[0]
-        acc = np.full((n_bands, *shape), np.nan)
-        for bufs in pdf["bands"]:
-            stack = decode_tile_float(list(bufs), ct, shape)
-            acc = np.where(np.isnan(acc), stack, acc)
-        bands = [encode_band(ct.from_float_nan(acc[b]), ct) for b in range(n_bands)]
         return pd.DataFrame(
-            [(first["time"], int(first["col"]), int(first["row"]), bands)],
+            [(first["time"], int(first["col"]), int(first["row"]),
+              merge_tiles(pdf["bands"], ct, shape, n_bands))],
             columns=["time", "col", "row", "bands"],
         )
 
     df = chunked.groupBy("time", "col", "row").applyInPandas(
-        merge_tiles, schema=cube.df.schema
+        merge_key, schema=cube.df.schema
     )
     return cube.with_df(df)

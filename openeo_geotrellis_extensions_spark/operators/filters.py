@@ -47,42 +47,43 @@ def crop(cube: DataCube, bbox: Extent) -> DataCube:
     + per-tile masking of pixels outside the bbox (tile geometry unchanged;
     outside pixels -> nodata)."""
     import numpy as np
-    import pandas as pd
 
-    from ..core.celltype import parse_cell_type
-    from ..core.tiles import decode_tile_float, encode_band
+    from ..core.tiles import decode_tiles_batch_float, encode_tiles_batch, row_chunks
 
     pruned = filter_bbox(cube, bbox)
     ld = cube.meta.layout
-    ct = parse_cell_type(cube.meta.cell_type)
+    ct = cube.meta.cell_type
     shape = cube.meta.tile_shape
+    n_bands = cube.meta.n_bands
 
     def crop_tiles(it):
         for pdf in it:
-            out = []
-            for rec in pdf.itertuples(index=False):
-                te = ld.extent_for_key(int(rec.col), int(rec.row))
-                if (bbox.xmin <= te.xmin and bbox.xmax >= te.xmax
-                        and bbox.ymin <= te.ymin and bbox.ymax >= te.ymax):
-                    out.append(list(rec.bands))  # fully inside: untouched
-                    continue
-                xs, ys = ld.pixel_centers_for_key(int(rec.col), int(rec.row))
-                inside = (
-                    (xs[None, :] > bbox.xmin) & (xs[None, :] < bbox.xmax)
-                    & (ys[:, None] > bbox.ymin) & (ys[:, None] < bbox.ymax)
-                )
-                stack = decode_tile_float(list(rec.bands), ct, shape)
-                out.append(
-                    [
-                        encode_band(
-                            ct.from_float_nan(np.where(inside, stack[b], np.nan)), ct
+            for s in row_chunks(len(pdf), n_bands, shape):
+                res = pdf.iloc[s].copy()
+                bands = res["bands"].tolist()
+                # tiles fully inside the bbox pass through untouched
+                partial, inside = [], []
+                for i, (c, r) in enumerate(zip(res["col"], res["row"])):
+                    te = ld.extent_for_key(int(c), int(r))
+                    if not (bbox.xmin <= te.xmin and bbox.xmax >= te.xmax
+                            and bbox.ymin <= te.ymin and bbox.ymax >= te.ymax):
+                        xs, ys = ld.pixel_centers_for_key(int(c), int(r))
+                        partial.append(i)
+                        inside.append(
+                            (xs[None, :] > bbox.xmin) & (xs[None, :] < bbox.xmax)
+                            & (ys[:, None] > bbox.ymin) & (ys[:, None] < bbox.ymax)
                         )
-                        for b in range(stack.shape[0])
-                    ]
-                )
-            res = pdf.copy()
-            res["bands"] = out
-            yield res
+                if partial:
+                    vals = decode_tiles_batch_float(
+                        [bands[i] for i in partial], ct, shape, n_bands
+                    )
+                    cropped = encode_tiles_batch(
+                        np.where(np.stack(inside)[:, None], vals, np.nan), ct
+                    )
+                    for i, enc in zip(partial, cropped):
+                        bands[i] = enc
+                res["bands"] = [list(b) for b in bands]
+                yield res
 
     return pruned.with_df(pruned.df.mapInPandas(crop_tiles, schema=pruned.df.schema))
 

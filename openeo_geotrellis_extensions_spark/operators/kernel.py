@@ -18,14 +18,13 @@ whose center input was NaN stay NaN (Geotrellis focal nodata convention).
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..core.celltype import parse_cell_type
-from ..core.tiles import decode_tile_float, encode_band
+from ..core.tiles import encode_tiles_batch, paste_tiles
 from ..sources.datacube import DataCube
 
 
@@ -44,19 +43,18 @@ def _convolve2d_same(arr: np.ndarray, kernel: np.ndarray) -> np.ndarray:
     return np.einsum("ijkl,kl->ij", win, kernel[::-1, ::-1])
 
 
-def apply_kernel(cube: DataCube, kernel, factor: float = 1.0) -> DataCube:
-    kernel = np.asarray(kernel, dtype=np.float64)
-    kh, kw = kernel.shape
+def map_halos(cube: DataCube, fn, out_ct) -> DataFrame:
+    """For every tile key, assemble the (bands, 3h, 3w) neighborhood with the
+    tile in the middle (missing neighbors NaN), call ``fn(halo)`` -> float
+    stack (bands, ...) and encode it into ``out_ct``. One shuffle: the 9-way
+    offset explode + groupBy(key); the result has the cube's schema."""
     h, w = cube.meta.tile_shape
-    if kh // 2 > h or kw // 2 > w:
-        raise ValueError("kernel halo exceeds tile size")
     ct = cube.meta.cell_type
     n_bands = cube.meta.n_bands
-    out_ct = parse_cell_type("float32" if parse_cell_type(ct).base != "float64" else "float64")
     keys = cube.key_cols
-    time_keys = [k for k in keys if k != "col" and k != "row"]
+    time_keys = [k for k in keys if k not in ("col", "row")]
 
-    # 9-way offset explode: each tile contributes to itself + 8 neighbors
+    # each tile contributes to itself + 8 neighbors
     offsets = F.expr(
         "explode(array(" + ", ".join(
             f"struct({dc} as dc, {dr} as dr)" for dr in (-1, 0, 1) for dc in (-1, 0, 1)
@@ -76,33 +74,40 @@ def apply_kernel(cube: DataCube, kernel, factor: float = 1.0) -> DataCube:
         & (F.col("col") < cube.meta.layout.layout_cols)
         & (F.col("row") < cube.meta.layout.layout_rows)
     )
-
     out_schema = cube.df.schema
 
-    def convolve_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        # assemble 3x3 padded neighborhood
-        padded = np.full((n_bands, 3 * h, 3 * w), np.nan)
-        center_present = False
-        for rec in pdf.itertuples(index=False):
-            dc, dr = int(rec.dc), int(rec.dr)
-            if dc == 0 and dr == 0:
-                center_present = True
-            stack = decode_tile_float(list(rec.bands), ct, (h, w))
-            padded[:, (dr + 1) * h : (dr + 2) * h, (dc + 1) * w : (dc + 2) * w] = stack
-        if not center_present:
+    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+        dc = pdf["dc"].to_numpy()
+        dr = pdf["dr"].to_numpy()
+        if not ((dc == 0) & (dr == 0)).any():
             return pd.DataFrame(columns=list(out_schema.fieldNames()))
+        halo = paste_tiles(
+            np.full((n_bands, 3 * h, 3 * w), np.nan), pdf["bands"],
+            zip((dr + 1) * h, (dc + 1) * w), ct, (h, w),
+        )
+        bands = encode_tiles_batch(np.asarray(fn(halo))[None], out_ct)[0]
         first = pdf.iloc[0]
-        bands = []
-        for b in range(n_bands):
-            arr = padded[b]
-            nanmask = np.isnan(arr)
-            filled = np.where(nanmask, 0.0, arr)
-            conv = _convolve2d_same(filled, kernel) * factor
-            conv[nanmask] = np.nan  # center-nodata stays nodata
-            center = conv[h : 2 * h, w : 2 * w]
-            bands.append(encode_band(out_ct.from_float_nan(center), out_ct))
         row = [first[k] for k in time_keys] + [int(first["col"]), int(first["row"]), bands]
         return pd.DataFrame([row], columns=time_keys + ["col", "row", "bands"])
 
-    df = exploded.groupBy(*keys).applyInPandas(convolve_group, schema=out_schema)
+    return exploded.groupBy(*keys).applyInPandas(run, schema=out_schema)
+
+
+def apply_kernel(cube: DataCube, kernel, factor: float = 1.0) -> DataCube:
+    kernel = np.asarray(kernel, dtype=np.float64)
+    kh, kw = kernel.shape
+    h, w = cube.meta.tile_shape
+    if kh // 2 > h or kw // 2 > w:
+        raise ValueError("kernel halo exceeds tile size")
+    ct = cube.meta.cell_type
+    out_ct = parse_cell_type("float32" if parse_cell_type(ct).base != "float64" else "float64")
+
+    def convolve(halo: np.ndarray) -> np.ndarray:
+        nanmask = np.isnan(halo)
+        filled = np.where(nanmask, 0.0, halo)
+        conv = np.stack([_convolve2d_same(band, kernel) * factor for band in filled])
+        conv[nanmask] = np.nan  # center-nodata stays nodata
+        return conv[:, h : 2 * h, w : 2 * w]
+
+    df = map_halos(cube, convolve, out_ct)
     return DataCube(df, cube.meta).with_meta(cell_type=out_ct.name)

@@ -22,9 +22,23 @@ from pyspark.sql import functions as F
 
 from ..core.celltype import parse_cell_type
 from ..core.geom import parse_geometry, rasterize
-from ..core.tiles import decode_tile_float, encode_band
+from ..core.tiles import (
+    decode_tiles_batch_float,
+    decoded_chunks,
+    encode_tiles_batch,
+    row_chunks,
+)
 from ..sources.datacube import DataCube
 from .zonal import feature_tile_keys
+
+
+def _decode_mask(mask_bands, cell_type: str, shape) -> np.ndarray:
+    """Mask band 0 of each row -> (n, h, w) with nodata and absent mask
+    tiles read as 1 (masked)."""
+    first = [None if mb is None else mb[:1] for mb in mask_bands]
+    return np.nan_to_num(
+        decode_tiles_batch_float(first, cell_type, shape, 1)[:, 0], nan=1.0
+    )
 
 
 def mask(
@@ -47,6 +61,7 @@ def mask(
     ct = cube.meta.cell_type
     mct = mask_cube.meta.cell_type
     shape = cube.meta.tile_shape
+    n_bands = cube.meta.n_bands
     out_ct = parse_cell_type(ct)
 
     m = mask_cube.df.select(*keys, F.col("bands").alias("mask_bands"))
@@ -58,12 +73,10 @@ def mask(
         # (DatacubeSupport.scala:191-243) still hold after pruning
         def fully_masked(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in it:
-                rows = []
-                for i, mb in enumerate(pdf["mask_bands"]):
-                    stack = decode_tile_float([mb[0]], mct, shape)
-                    if not (np.nan_to_num(stack[0], nan=1.0) == 0).any():
-                        rows.append(i)
-                yield pdf.iloc[rows][[*keys]]
+                for s in row_chunks(len(pdf), 1, shape):
+                    chunk = pdf.iloc[s]
+                    mvals = _decode_mask(chunk["mask_bands"], mct, shape)
+                    yield chunk[~(mvals == 0).any(axis=(1, 2))][[*keys]]
 
         dead = m.mapInPandas(
             fully_masked, schema=m.select(*keys).schema
@@ -75,26 +88,18 @@ def mask(
 
     def apply_mask(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         repl = np.nan if replacement is None else float(replacement)
-        for pdf in it:
-            out = []
-            for bufs, mb in zip(pdf["bands"], pdf["mask_bands"]):
-                if mb is None:
-                    out.append(list(bufs))
-                    continue
-                mask_arr = decode_tile_float([mb[0]], mct, shape)[0]
-                hide = ~(np.nan_to_num(mask_arr, nan=1.0) == 0)
-                stack = decode_tile_float(list(bufs), ct, shape)
-                out.append(
-                    [
-                        encode_band(
-                            out_ct.from_float_nan(np.where(hide, repl, stack[b])),
-                            out_ct,
-                        )
-                        for b in range(stack.shape[0])
-                    ]
-                )
+        for pdf, vals in decoded_chunks(it, ct, shape, n_bands):
+            has_mask = pdf["mask_bands"].notna().to_numpy()
+            hide = _decode_mask(pdf["mask_bands"], mct, shape) != 0
+            encoded = encode_tiles_batch(
+                np.where(hide[:, None], repl, vals), out_ct
+            )
             res = pdf.drop(columns=["mask_bands"])
-            res["bands"] = out
+            # mask tile absent -> data unchanged
+            res["bands"] = [
+                enc if has else list(raw)
+                for enc, has, raw in zip(encoded, has_mask, pdf["bands"])
+            ]
             yield res
 
     return cube.with_df(joined.mapInPandas(apply_mask, schema=out_schema))
@@ -112,6 +117,7 @@ def mask_polygon(
     layout = cube.meta.layout
     ct = cube.meta.cell_type
     shape = cube.meta.tile_shape
+    n_bands = cube.meta.n_bands
     out_ct = parse_cell_type(ct)
 
     fkeys = feature_tile_keys(features, layout)
@@ -133,47 +139,43 @@ def mask_polygon(
         repl = np.nan if replacement is None else float(replacement)
         geom_cache: dict[int, object] = {}
         mask_cache: dict[tuple, np.ndarray] = {}
-        for pdf in it:
-            out_rows = []
-            out_bands = []
-            for i, (c, r, bufs, contained, fis, feats) in enumerate(
-                zip(pdf["col"], pdf["row"], pdf["bands"], pdf["contained"],
-                    pdf["fis"], pdf["feats"])
-            ):
-                c, r = int(c), int(r)
-                mk = (c, r)
-                inside_mask = mask_cache.get(mk)
-                if inside_mask is None:
-                    if contained:
-                        inside_mask = np.ones(shape, dtype=bool)
-                    else:
-                        inside_mask = np.zeros(shape, dtype=bool)
-                        xs, ys = layout.pixel_centers_for_key(c, r)
-                        for fi in fis:
-                            g = geom_cache.get(int(fi))
-                            if g is None:
-                                gj = next(
-                                    f["geojson"] for f in feats
-                                    if f["feature_index"] == fi
-                                )
-                                g = parse_geometry(gj)
-                                geom_cache[int(fi)] = g
-                            inside_mask |= rasterize(g, xs, ys)
-                    mask_cache[mk] = inside_mask
-                hide = inside_mask if inside else ~inside_mask
-                stack = decode_tile_float(list(bufs), ct, shape)
-                out_rows.append(i)
-                out_bands.append(
-                    [
-                        encode_band(
-                            out_ct.from_float_nan(np.where(hide, repl, stack[b])),
-                            out_ct,
+
+        def inside_mask(c: int, r: int, contained, fis, feats) -> np.ndarray:
+            m = mask_cache.get((c, r))
+            if m is not None:
+                return m
+            if contained:
+                m = np.ones(shape, dtype=bool)
+            else:
+                m = np.zeros(shape, dtype=bool)
+                xs, ys = layout.pixel_centers_for_key(c, r)
+                for fi in fis:
+                    g = geom_cache.get(int(fi))
+                    if g is None:
+                        gj = next(
+                            f["geojson"] for f in feats if f["feature_index"] == fi
                         )
-                        for b in range(stack.shape[0])
-                    ]
-                )
-            res = pdf.iloc[out_rows].drop(columns=["contained", "fis", "feats"])
-            res["bands"] = out_bands
+                        g = parse_geometry(gj)
+                        geom_cache[int(fi)] = g
+                    m |= rasterize(g, xs, ys)
+            mask_cache[(c, r)] = m
+            return m
+
+        for pdf, vals in decoded_chunks(it, ct, shape, n_bands):
+            inside_m = np.stack(
+                [
+                    inside_mask(int(c), int(r), contained, fis, feats)
+                    for c, r, contained, fis, feats in zip(
+                        pdf["col"], pdf["row"], pdf["contained"], pdf["fis"],
+                        pdf["feats"],
+                    )
+                ]
+            )
+            hide = inside_m if inside else ~inside_m
+            res = pdf.drop(columns=["contained", "fis", "feats"])
+            res["bands"] = encode_tiles_batch(
+                np.where(hide[:, None], repl, vals), out_ct
+            )
             yield res
 
     return cube.with_df(joined.mapInPandas(apply_mask, schema=out_schema))

@@ -20,13 +20,24 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from ..core.celltype import cell_type_union, parse_cell_type
-from ..core.tiles import decode_tile_float, encode_band, is_empty_band
+from ..core.tiles import decode_tiles_batch_float, encode_tiles_batch, row_chunks
 from ..functions.process_compiler import compile_process_graph
 from ..sources.datacube import DataCube
 
 #: binary overlap ops supported as shorthand (OpenEOProcesses.scala:103-115)
 _BINARY_OPS = {"or", "and", "divide", "max", "min", "multiply", "add",
                "subtract", "xor", "sum", "product"}
+
+
+def _decode_sides(pdf: pd.DataFrame, ct_a: str, ct_b: str, shape, na: int, nb: int):
+    """Both sides of an outer-joined chunk as float stacks; a missing side
+    (null band list) is all-NaN whatever its cell type."""
+    out = []
+    for col, ct, n in (("bands_l", ct_a, na), ("bands_r", ct_b, nb)):
+        v = decode_tiles_batch_float(pdf[col].tolist(), ct, shape, n)
+        v[pdf[col].isna().to_numpy()] = np.nan
+        out.append(v)
+    return out
 
 
 def merge_cubes(a: DataCube, b: DataCube, overlap_resolver: str | dict | None = None) -> DataCube:
@@ -65,27 +76,14 @@ def merge_cubes(a: DataCube, b: DataCube, overlap_resolver: str | dict | None = 
         # cell types differ: decode + re-encode to the union type
         def recode(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in it:
-                out = []
-                for bl, br in zip(pdf["bands_l"], pdf["bands_r"]):
-                    bands = []
-                    sl = (
-                        decode_tile_float(list(bl), ct_a, shape)
-                        if bl is not None
-                        else np.full((na, *shape), np.nan)
+                for s in row_chunks(len(pdf), na + nb, shape):
+                    chunk = pdf.iloc[s]
+                    vl, vr = _decode_sides(chunk, ct_a, ct_b, shape, na, nb)
+                    res = chunk.drop(columns=["bands_l", "bands_r"])
+                    res["bands"] = encode_tiles_batch(
+                        np.concatenate([vl, vr], axis=1), union_ct
                     )
-                    sr = (
-                        decode_tile_float(list(br), ct_b, shape)
-                        if br is not None
-                        else np.full((nb, *shape), np.nan)
-                    )
-                    for arr in list(sl) + list(sr):
-                        bands.append(
-                            encode_band(union_ct.from_float_nan(arr), union_ct)
-                        )
-                    out.append(bands)
-                res = pdf.drop(columns=["bands_l", "bands_r"])
-                res["bands"] = out
-                yield res
+                    yield res
 
         out_schema = a.df.schema
         df = joined.mapInPandas(recode, schema=out_schema)
@@ -122,31 +120,17 @@ def merge_cubes(a: DataCube, b: DataCube, overlap_resolver: str | dict | None = 
 
     def resolve(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            out = []
-            for bl, br in zip(pdf["bands_l"], pdf["bands_r"]):
-                if bl is None:
-                    sl = None
-                else:
-                    sl = decode_tile_float(list(bl), ct_a, shape)
-                if br is None:
-                    sr = None
-                else:
-                    sr = decode_tile_float(list(br), ct_b, shape)
-                bands = []
-                for i in range(na):
-                    if sl is None:
-                        v = sr[i]
-                    elif sr is None:
-                        v = sl[i]
-                    else:
-                        v = np.asarray(
-                            comp.fn({"x": sl[i], "y": sr[i]}), dtype=np.float64
-                        )
-                    bands.append(encode_band(union_ct.from_float_nan(v), union_ct))
-                out.append(bands)
-            res = pdf.drop(columns=["bands_l", "bands_r"])
-            res["bands"] = out
-            yield res
+            for s in row_chunks(len(pdf), 2 * na, shape):
+                chunk = pdf.iloc[s]
+                vl, vr = _decode_sides(chunk, ct_a, ct_b, shape, na, nb)
+                both = np.asarray(comp.fn({"x": vl, "y": vr}), dtype=np.float64)
+                # a side missing from the outer join passes the other through
+                no_l = chunk["bands_l"].isna().to_numpy()[:, None, None, None]
+                no_r = chunk["bands_r"].isna().to_numpy()[:, None, None, None]
+                v = np.where(no_l, vr, np.where(no_r, vl, both))
+                res = chunk.drop(columns=["bands_l", "bands_r"])
+                res["bands"] = encode_tiles_batch(v, union_ct)
+                yield res
 
     df = joined.mapInPandas(resolve, schema=a.df.schema)
     return DataCube(df, a.meta).with_meta(cell_type=out_ct_name)

@@ -23,9 +23,10 @@ from pyspark.sql import functions as F
 
 from ..core.celltype import parse_cell_type
 from ..core.grid import LayoutDefinition
-from ..core.tiles import decode_tile_float, encode_band
+from ..core.tiles import encode_tiles_batch, paste_tiles
 from ..functions.process_compiler import compile_process_graph
 from ..sources.datacube import CubeMeta, DataCube
+from .kernel import map_halos
 
 
 def apply_neighborhood(
@@ -43,7 +44,6 @@ def apply_neighborhood(
         raise ValueError("overlap exceeds tile size")
     h, w = cube.meta.tile_shape
     ct = cube.meta.cell_type
-    n_bands = cube.meta.n_bands
     out_ct = parse_cell_type(
         "float64" if parse_cell_type(ct).base == "float64" else "float32"
     )
@@ -59,52 +59,14 @@ def apply_neighborhood(
                  for b in range(padded.shape[0])]
             )
 
-    keys = cube.key_cols
-    time_keys = [k for k in keys if k not in ("col", "row")]
-    offsets = F.expr(
-        "explode(array(" + ", ".join(
-            f"struct({dc} as dc, {dr} as dr)" for dr in (-1, 0, 1) for dc in (-1, 0, 1)
-        ) + "))"
-    )
-    exploded = cube.df.select(*time_keys, "col", "row", "bands", offsets.alias("o")).select(
-        *time_keys,
-        (F.col("col") + F.col("o.dc")).alias("col"),
-        (F.col("row") + F.col("o.dr")).alias("row"),
-        (-F.col("o.dc")).alias("dc"),
-        (-F.col("o.dr")).alias("dr"),
-        "bands",
-    ).where(
-        (F.col("col") >= 0) & (F.col("row") >= 0)
-        & (F.col("col") < cube.meta.layout.layout_cols)
-        & (F.col("row") < cube.meta.layout.layout_rows)
-    )
-
-    out_schema = cube.df.schema
-
-    def apply_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        padded = np.full((n_bands, 3 * h, 3 * w), np.nan)
-        center = False
-        for rec in pdf.itertuples(index=False):
-            dc, dr = int(rec.dc), int(rec.dr)
-            if dc == 0 and dr == 0:
-                center = True
-            stack = decode_tile_float(list(rec.bands), ct, (h, w))
-            padded[:, (dr + 1) * h : (dr + 2) * h, (dc + 1) * w : (dc + 2) * w] = stack
-        if not center:
-            return pd.DataFrame(columns=list(out_schema.fieldNames()))
-        first = pdf.iloc[0]
-        win = padded[:, h - overlap : 2 * h + overlap, w - overlap : 2 * w + overlap]
+    def apply_window(halo: np.ndarray) -> np.ndarray:
+        win = halo[:, h - overlap : 2 * h + overlap, w - overlap : 2 * w + overlap]
         res = np.asarray(user_fn(win), dtype=np.float64)
         if res.shape != win.shape:
             raise ValueError(f"neighborhood fn changed shape {win.shape} -> {res.shape}")
-        core = res[:, overlap : overlap + h, overlap : overlap + w]
-        bands = [
-            encode_band(out_ct.from_float_nan(core[b]), out_ct) for b in range(n_bands)
-        ]
-        row = [first[k] for k in time_keys] + [int(first["col"]), int(first["row"]), bands]
-        return pd.DataFrame([row], columns=time_keys + ["col", "row", "bands"])
+        return res[:, overlap : overlap + h, overlap : overlap + w]
 
-    df = exploded.groupBy(*keys).applyInPandas(apply_group, schema=out_schema)
+    df = map_halos(cube, apply_window, out_ct)
     return DataCube(df, cube.meta).with_meta(cell_type=out_ct.name)
 
 
@@ -131,12 +93,11 @@ def zoom_out(cube: DataCube) -> DataCube:
 
     def merge(pdf: pd.DataFrame) -> pd.DataFrame:
         first = pdf.iloc[0]
-        full = np.full((n_bands, 2 * h, 2 * w), np.nan)
-        for rec in pdf.itertuples(index=False):
-            sub = decode_tile_float(list(rec.bands), ct, (h, w))
-            ro = (int(rec.row) % 2) * h
-            co = (int(rec.col) % 2) * w
-            full[:, ro : ro + h, co : co + w] = sub
+        full = paste_tiles(
+            np.full((n_bands, 2 * h, 2 * w), np.nan), pdf["bands"],
+            zip((pdf["row"].to_numpy() % 2) * h, (pdf["col"].to_numpy() % 2) * w),
+            ct, (h, w),
+        )
         import warnings
 
         with warnings.catch_warnings():
@@ -145,9 +106,7 @@ def zoom_out(cube: DataCube) -> DataCube:
                 full.reshape(n_bands, h, 2, w, 2).transpose(0, 1, 3, 2, 4).reshape(n_bands, h, w, 4),
                 axis=3,
             )
-        bands = [
-            encode_band(out_ct.from_float_nan(down[b]), out_ct) for b in range(n_bands)
-        ]
+        bands = encode_tiles_batch(down[None], out_ct)[0]
         row = ([first["time"]] if temporal else []) + [int(first["pc"]), int(first["pr"]), bands]
         cols = (["time"] if temporal else []) + ["col", "row", "bands"]
         return pd.DataFrame([row], columns=cols)

@@ -28,7 +28,12 @@ from pyspark.sql import functions as F
 
 from ..core.celltype import parse_cell_type
 from ..core.grid import LayoutDefinition
-from ..core.tiles import decode_tile_float, encode_band
+from ..core.tiles import (
+    decode_tiles_batch_float,
+    decoded_chunks,
+    encode_tiles_batch,
+    merge_tiles,
+)
 from ..sources.datacube import CubeMeta, DataCube, cube_schema
 
 
@@ -75,21 +80,14 @@ def resample_spatial(
 
     def fragments(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         th, tw = target.tile_rows, target.tile_cols
-        for pdf in it:
-            rows = []
-            for rec in pdf.itertuples(index=False):
+        # bilinear reads the padded (h+2, w+2) float64 planes of _pad_one_pixel
+        in_ct, in_shape = (
+            ("float64", (shape[0] + 2, shape[1] + 2)) if bilinear else (ct, shape)
+        )
+        for pdf, vals in decoded_chunks(it, in_ct, in_shape, n_bands):
+            out_keys, frags = [], []
+            for rec, stack in zip(pdf.itertuples(index=False), vals):
                 c, r = int(rec.col), int(rec.row)
-                if bilinear:
-                    # padded (h+2, w+2) float64 planes from _pad_one_pixel
-                    pad_shape = (shape[0] + 2, shape[1] + 2)
-                    stack = np.stack(
-                        [
-                            np.frombuffer(buf, dtype=np.float64).reshape(pad_shape)
-                            for buf in rec.bands
-                        ]
-                    )
-                else:
-                    stack = decode_tile_float(list(rec.bands), ct, shape)
                 se = src.extent_for_key(c, r)
                 # target keys overlapped by this source tile (footprint
                 # forward-projected into the target CRS)
@@ -140,16 +138,12 @@ def resample_spatial(
                     else:
                         for b in range(n_bands):
                             frag[b][ok] = stack[b][py[ok], px[ok]]
-                    bands = [
-                        encode_band(out_ct.from_float_nan(frag[b]), out_ct)
-                        for b in range(n_bands)
-                    ]
-                    if temporal:
-                        rows.append((rec.time, tc, tr, bands))
-                    else:
-                        rows.append((tc, tr, bands))
-            cols = (["time"] if temporal else []) + ["col", "row", "bands"]
-            yield pd.DataFrame(rows, columns=cols)
+                    out_keys.append(([rec.time] if temporal else []) + [tc, tr])
+                    frags.append(frag)
+            cols = (["time"] if temporal else []) + ["col", "row"]
+            out = pd.DataFrame(out_keys, columns=cols)
+            out["bands"] = encode_tiles_batch(np.stack(frags), out_ct) if frags else []
+            yield out
 
     frags = src_df.mapInPandas(fragments, schema=frag_schema)
 
@@ -157,13 +151,7 @@ def resample_spatial(
 
     def merge_frags(pdf: pd.DataFrame) -> pd.DataFrame:
         th, tw = target.tile_rows, target.tile_cols
-        acc = np.full((n_bands, th, tw), np.nan)
-        for bufs in pdf["bands"]:
-            frag = decode_tile_float(list(bufs), out_ct.name, (th, tw))
-            acc = np.where(np.isnan(acc), frag, acc)
-        bands = [
-            encode_band(out_ct.from_float_nan(acc[b]), out_ct) for b in range(n_bands)
-        ]
+        bands = merge_tiles(pdf["bands"], out_ct, (th, tw), n_bands)
         first = pdf.iloc[0]
         row = ([first["time"]] if temporal else []) + [int(first["col"]), int(first["row"]), bands]
         return pd.DataFrame([row], columns=(["time"] if temporal else []) + ["col", "row", "bands"])
@@ -208,7 +196,7 @@ def _resample_aggregate(
     ct = cube.meta.cell_type
     n_bands = cube.meta.n_bands
     shape = cube.meta.tile_shape
-    out_ct = parse_cell_type("float64")
+    f64 = parse_cell_type("float64")
     temporal = cube.meta.temporal
     from pyspark.sql.types import (
         ArrayType,
@@ -232,11 +220,10 @@ def _resample_aggregate(
 
     def partials(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         th, tw = target.tile_rows, target.tile_cols
-        for pdf in it:
-            rows = []
-            for rec in pdf.itertuples(index=False):
+        for pdf, vals in decoded_chunks(it, ct, shape, n_bands):
+            out_keys, accs, cnts = [], [], []
+            for rec, stack in zip(pdf.itertuples(index=False), vals):
                 c, r = int(rec.col), int(rec.row)
-                stack = decode_tile_float(list(rec.bands), ct, shape)
                 se = src.extent_for_key(c, r)
                 # source pixel centers -> global target pixel indices
                 xs = se.xmin + (np.arange(shape[1]) + 0.5) * src.cell_width
@@ -261,7 +248,7 @@ def _resample_aggregate(
                         if not own.any():
                             continue
                         flat = (iny * tw + inx)[own]
-                        accs, cnts = [], []
+                        acc_b, cnt_b = [], []
                         for b in range(n_bands):
                             v = stack[b][own]
                             valid = ~np.isnan(v)
@@ -281,12 +268,17 @@ def _resample_aggregate(
                                     weights=v[valid],
                                     minlength=th * tw,
                                 )
-                            accs.append(acc.reshape(th, tw).tobytes())
-                            cnts.append(cnt.reshape(th, tw).tobytes())
-                        key = [rec.time] if temporal else []
-                        rows.append(key + [int(tc), int(tr), accs, cnts])
-            cols = (["time"] if temporal else []) + ["col", "row", "accs", "cnts"]
-            yield pd.DataFrame(rows, columns=cols)
+                            acc_b.append(acc.reshape(th, tw))
+                            cnt_b.append(cnt.reshape(th, tw))
+                        out_keys.append(([rec.time] if temporal else []) + [int(tc), int(tr)])
+                        accs.append(acc_b)
+                        cnts.append(cnt_b)
+            cols = (["time"] if temporal else []) + ["col", "row"]
+            out = pd.DataFrame(out_keys, columns=cols)
+            # partial planes travel as float64 tiles (NaN = no value yet)
+            out["accs"] = encode_tiles_batch(np.array(accs), f64) if out_keys else []
+            out["cnts"] = encode_tiles_batch(np.array(cnts), f64) if out_keys else []
+            yield out
 
     frags = cube.df.mapInPandas(partials, schema=part_schema)
     keys = (["time"] if temporal else []) + ["col", "row"]
@@ -296,10 +288,10 @@ def _resample_aggregate(
         th, tw = target.tile_rows, target.tile_cols
         acc = np.full((n_bands, th, tw), np.nan)
         cnt = np.zeros((n_bands, th, tw))
-        for accs, cnts in zip(pdf["accs"], pdf["cnts"]):
-            for b in range(n_bands):
-                a = np.frombuffer(accs[b], dtype=np.float64).reshape(th, tw)
-                n = np.frombuffer(cnts[b], dtype=np.float64).reshape(th, tw)
+        accs = decode_tiles_batch_float(pdf["accs"].tolist(), f64, (th, tw), n_bands)
+        cnts = decode_tiles_batch_float(pdf["cnts"].tolist(), f64, (th, tw), n_bands)
+        for acc_r, cnt_r in zip(accs, cnts):
+            for b, (a, n) in enumerate(zip(acc_r, cnt_r)):
                 if is_minmax:
                     both = ~np.isnan(acc[b]) & ~np.isnan(a)
                     op = np.fmin if method == "min" else np.fmax
@@ -318,10 +310,7 @@ def _resample_aggregate(
                 out = np.where(cnt > 0, acc, np.nan)
             else:
                 out = acc
-        bands = [
-            encode_band(out_ct.from_float_nan(out[b]), out_ct)
-            for b in range(n_bands)
-        ]
+        bands = encode_tiles_batch(out[None], f64)[0]
         first = pdf.iloc[0]
         row = ([first["time"]] if temporal else []) + [
             int(first["col"]),
@@ -333,63 +322,24 @@ def _resample_aggregate(
         )
 
     merged = frags.groupBy(*keys).applyInPandas(merge_partials, schema=out_schema)
-    meta = CubeMeta(target, out_ct.name, cube.meta.band_names, temporal)
+    meta = CubeMeta(target, f64.name, cube.meta.band_names, temporal)
     return DataCube(merged, meta)
 
 
 def _pad_one_pixel(cube: DataCube) -> "DataFrame":
     """One-pixel halo exchange for bilinear warping: the kernel module's
-    9-way offset explode (one shuffle) assembles each tile's 8 neighbors and
-    crops a (h+2, w+2) float64 padded plane per band — so border pixels'
-    2x2 bilinear neighborhoods are always local (TileRDDReproject buffers
-    tiles the same way before resampling). Missing neighbors stay NaN
-    (layout edge -> weight renormalization)."""
-    from pyspark.sql import functions as F
+    halo assembly (one shuffle) crops a (h+2, w+2) float64 padded plane per
+    band around each tile — so border pixels' 2x2 bilinear neighborhoods are
+    always local (TileRDDReproject buffers tiles the same way before
+    resampling). Missing neighbors stay NaN (layout edge -> weight
+    renormalization)."""
+    from .kernel import map_halos
 
-    ct = cube.meta.cell_type
-    n_bands = cube.meta.n_bands
     h, w = cube.meta.tile_shape
-    keys = cube.key_cols
-    time_keys = [k for k in keys if k not in ("col", "row")]
-    offsets = F.expr(
-        "explode(array(" + ", ".join(
-            f"struct({dc} as dc, {dr} as dr)" for dr in (-1, 0, 1) for dc in (-1, 0, 1)
-        ) + "))"
+    return map_halos(
+        cube, lambda halo: halo[:, h - 1 : 2 * h + 1, w - 1 : 2 * w + 1],
+        parse_cell_type("float64"),
     )
-    exploded = cube.df.select(
-        *time_keys, "col", "row", "bands", offsets.alias("o")
-    ).select(
-        *time_keys,
-        (F.col("col") + F.col("o.dc")).alias("col"),
-        (F.col("row") + F.col("o.dr")).alias("row"),
-        (-F.col("o.dc")).alias("dc"),
-        (-F.col("o.dr")).alias("dr"),
-        "bands",
-    ).where(
-        (F.col("col") >= 0) & (F.col("row") >= 0)
-        & (F.col("col") < cube.meta.layout.layout_cols)
-        & (F.col("row") < cube.meta.layout.layout_rows)
-    )
-    out_schema = cube.df.schema
-
-    def pad_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        big = np.full((n_bands, 3 * h, 3 * w), np.nan)
-        center = False
-        for rec in pdf.itertuples(index=False):
-            dc, dr = int(rec.dc), int(rec.dr)
-            if dc == 0 and dr == 0:
-                center = True
-            stack = decode_tile_float(list(rec.bands), ct, (h, w))
-            big[:, (dr + 1) * h : (dr + 2) * h, (dc + 1) * w : (dc + 2) * w] = stack
-        if not center:
-            return pd.DataFrame(columns=list(out_schema.fieldNames()))
-        first = pdf.iloc[0]
-        padded = big[:, h - 1 : 2 * h + 1, w - 1 : 2 * w + 1]
-        bands = [padded[b].astype(np.float64).tobytes() for b in range(n_bands)]
-        row = [first[k] for k in time_keys] + [int(first["col"]), int(first["row"]), bands]
-        return pd.DataFrame([row], columns=time_keys + ["col", "row", "bands"])
-
-    return exploded.groupBy(*keys).applyInPandas(pad_group, schema=out_schema)
 
 
 def retile(cube: DataCube, tile_cols: int, tile_rows: int) -> DataCube:

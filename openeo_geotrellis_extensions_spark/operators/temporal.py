@@ -20,9 +20,16 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from ..core.celltype import parse_cell_type
-from ..core.tiles import decode_tile_float, encode_band
+from ..core.tiles import decode_tiles_batch_float, encode_tiles_batch
 from ..sources.datacube import DataCube, cube_schema
-from .apply_process import _compile
+from .apply_process import _compile, _over_time
+
+
+def _reduce_stack(pdf, comp, src_ct, shape, n_bands, out_ct, ctx) -> list[bytes]:
+    """Reduce a time-sorted group's tiles over time -> one encoded tile."""
+    stacks = decode_tiles_batch_float(pdf["bands"].tolist(), src_ct, shape, n_bands)
+    tls = [t.isoformat() for t in pdf["time"]]
+    return encode_tiles_batch(_over_time(comp, stacks, tls, ctx, shape)[None], out_ct)[0]
 
 
 def aggregate_temporal(
@@ -63,19 +70,7 @@ def aggregate_temporal(
         col = int(pdf["col"].iloc[0])
         row = int(pdf["row"].iloc[0])
         label = pdf["label"].iloc[0]
-        stacks = np.stack(
-            [decode_tile_float(list(b), src_ct, shape) for b in pdf["bands"]]
-        )
-        tls = [t.isoformat() for t in pdf["time"]]
-        bands = []
-        for b in range(n_bands):
-            res = comp.fn({"data": stacks[:, b], "array_labels": tls, **ctx})
-            bands.append(
-                encode_band(
-                    out_ct.from_float_nan(np.asarray(res, dtype=np.float64)),
-                    out_ct,
-                )
-            )
+        bands = _reduce_stack(pdf, comp, src_ct, shape, n_bands, out_ct, ctx)
         return pd.DataFrame(
             [(label, col, row, bands)], columns=["label", "col", "row", "bands"]
         )
@@ -128,19 +123,7 @@ def aggregate_temporal_period(
 
     def reduce_group(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("time")
-        stacks = np.stack(
-            [decode_tile_float(list(b), src_ct, shape) for b in pdf["bands"]]
-        )
-        tls = [t.isoformat() for t in pdf["time"]]
-        bands = []
-        for b in range(n_bands):
-            res = comp.fn({"data": stacks[:, b], "array_labels": tls, **ctx})
-            bands.append(
-                encode_band(
-                    out_ct.from_float_nan(np.asarray(res, dtype=np.float64)),
-                    out_ct,
-                )
-            )
+        bands = _reduce_stack(pdf, comp, src_ct, shape, n_bands, out_ct, ctx)
         return pd.DataFrame(
             [(pdf["label"].iloc[0], int(pdf["col"].iloc[0]), int(pdf["row"].iloc[0]), bands)],
             columns=["time", "col", "row", "bands"],

@@ -36,6 +36,7 @@ from pyspark.sql.types import (
 
 from ..core.geom import classify_rect, parse_geometry, points_in_geometry
 from ..core.grid import LayoutDefinition
+from ..core.tiles import decoded_chunks
 from ..sources.datacube import DataCube
 
 _KEYS_SCHEMA = StructType(
@@ -179,6 +180,27 @@ _PARTIAL_SCHEMA = StructType(
 )
 
 
+def _keyed(schema: StructType, temporal: bool) -> StructType:
+    """Partial schema for a temporal cube, or without ``time`` for a
+    spatial-only one."""
+    return StructType([f for f in schema.fields if temporal or f.name != "time"])
+
+
+def _dense_restore(cube: DataCube, features: DataFrame, stats: DataFrame) -> DataFrame:
+    """Left-join ``stats`` onto every (date, feature, band) — or (feature,
+    band) on a spatial-only cube — so zones without valid pixels still get a
+    row. distinct_times uses the constructor's cheap pre-Python lineage when
+    available: the full cube.df branch would re-run the opaque tile stage
+    just to enumerate dates."""
+    feats = F.broadcast(features.select("feature_index"))
+    bands_df = features.sparkSession.range(cube.meta.n_bands).select(
+        F.col("id").cast("int").alias("band")
+    )
+    full = (cube.distinct_times().crossJoin(feats) if cube.meta.temporal else feats)
+    keys = (["time"] if cube.meta.temporal else []) + ["feature_index", "band"]
+    return full.crossJoin(F.broadcast(bands_df)).join(stats, keys, "left")
+
+
 def aggregate_spatial(
     cube: DataCube,
     features: DataFrame,
@@ -207,97 +229,88 @@ def aggregate_spatial(
     }
     joined = cube.df.join(fkeys, ["col", "row"], "inner")
 
-    from ..core.tiles import decode_tiles_batch_float
+    temporal = cube.meta.temporal
 
     def partials(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         geom_cache: dict[int, object] = {}
         mask_cache: dict[tuple, np.ndarray] = {}
         px_area = shape[0] * shape[1]
-        # bound peak memory: the vectorized reduce materializes a few
-        # (rows, nb, h, w) float64 temporaries, so cap rows per chunk at
-        # ~8M elements (~64 MB per temporary) — a 10k-row Arrow batch of
-        # 256x256 production tiles would otherwise peak at several GB
-        chunk_rows = max(1, 8_000_000 // max(1, n_bands * px_area))
-        for full_pdf in it:
-            for lo in range(0, len(full_pdf), chunk_rows):
-                pdf = full_pdf.iloc[lo:lo + chunk_rows]
-                nrow = len(pdf)
-                if nrow == 0:
-                    continue
-                # one decode pass for the chunk: (n, nb, h, w) with NaN
-                cube_vals = decode_tiles_batch_float(
-                    pdf["bands"].tolist(), ct_name, shape, n_bands
-                )
-                contained = pdf["contained"].to_numpy(dtype=bool)
-                cols_a = pdf["col"].to_numpy()
-                rows_a = pdf["row"].to_numpy()
-                fis_a = pdf["feature_index"].to_numpy()
-                # interior ('contained') rows keep the implicit all-ones
-                # mask; only boundary rows rasterize their geometry
-                totals = np.full(nrow, px_area, dtype=np.int64)
-                for i in np.nonzero(~contained)[0]:
-                    c, r, fi = int(cols_a[i]), int(rows_a[i]), int(fis_a[i])
-                    mkey = (fi, c, r)
-                    mask = mask_cache.get(mkey)
-                    if mask is None:
-                        g = geom_cache.get(fi)
-                        if g is None:
-                            g = parse_geometry(feat_map[fi])
-                            geom_cache[fi] = g
-                        xs, ys = layout.pixel_centers_for_key(c, r)
-                        if g.kind in ("Point", "MultiPoint"):
-                            mask = np.zeros(shape, dtype=bool)
-                            for px_, py_ in g.points:
-                                pc, pr = layout.key_for_point(px_, py_)
-                                if (pc, pr) == (c, r):
-                                    ix = int((px_ - xs[0] + layout.cell_width / 2) // layout.cell_width)
-                                    iy = int((ys[0] - py_ + layout.cell_height / 2) // layout.cell_height)
-                                    if 0 <= iy < shape[0] and 0 <= ix < shape[1]:
-                                        mask[iy, ix] = True
-                        else:
-                            gx, gy = np.meshgrid(xs, ys)
-                            mask = points_in_geometry(
-                                g, gx.ravel(), gy.ravel()
-                            ).reshape(shape)
-                        mask_cache[mkey] = mask
-                    # apply boundary mask IN PLACE on the owned decode buffer
-                    cube_vals[i, :, ~mask] = np.nan
-                    totals[i] = int(mask.sum())
-                # vectorized per-(row, band) stats; temporaries are created
-                # one at a time and freed, each bounded by chunk_rows
-                valid = ~np.isnan(cube_vals)
-                cnt = valid.sum(axis=(2, 3))                   # (n, nb)
-                tmp = np.where(valid, cube_vals, 0.0)
-                sm = tmp.sum(axis=(2, 3))
-                tmp *= tmp
-                ssq = tmp.sum(axis=(2, 3))
-                np.copyto(tmp, cube_vals, where=valid)
-                np.copyto(tmp, np.inf, where=~valid)
-                mn = tmp.min(axis=(2, 3))
-                np.copyto(tmp, -np.inf, where=~valid)
-                mx = tmp.max(axis=(2, 3))
-                del tmp, valid
-                # emit only (row, band) cells with >=1 valid pixel in a
-                # non-empty zone — NaN partials would poison group min/max;
-                # dense restore fills the missing rows downstream
-                ri, bi = np.nonzero((cnt > 0) & (totals[:, None] > 0))
-                yield pd.DataFrame(
-                    {
-                        "time": pdf["time"].to_numpy()[ri],
-                        "feature_index": fis_a[ri],
-                        "band": bi.astype(np.int32),
-                        "cnt": cnt[ri, bi].astype(np.int64),
-                        "total": totals[ri],
-                        "sm": sm[ri, bi],
-                        "mn": mn[ri, bi],
-                        "mx": mx[ri, bi],
-                        "ssq": ssq[ri, bi],
-                    }
-                )
+        # bounded row chunks: the vectorized reduce materializes a few
+        # (rows, nb, h, w) float64 temporaries, each capped by the codec's
+        # chunk bound; the boundary mask is applied in place on cube_vals
+        for pdf, cube_vals in decoded_chunks(it, ct_name, shape, n_bands):
+            nrow = len(pdf)
+            contained = pdf["contained"].to_numpy(dtype=bool)
+            cols_a = pdf["col"].to_numpy()
+            rows_a = pdf["row"].to_numpy()
+            fis_a = pdf["feature_index"].to_numpy()
+            # interior ('contained') rows keep the implicit all-ones
+            # mask; only boundary rows rasterize their geometry
+            totals = np.full(nrow, px_area, dtype=np.int64)
+            for i in np.nonzero(~contained)[0]:
+                c, r, fi = int(cols_a[i]), int(rows_a[i]), int(fis_a[i])
+                mkey = (fi, c, r)
+                mask = mask_cache.get(mkey)
+                if mask is None:
+                    g = geom_cache.get(fi)
+                    if g is None:
+                        g = parse_geometry(feat_map[fi])
+                        geom_cache[fi] = g
+                    xs, ys = layout.pixel_centers_for_key(c, r)
+                    if g.kind in ("Point", "MultiPoint"):
+                        mask = np.zeros(shape, dtype=bool)
+                        for px_, py_ in g.points:
+                            pc, pr = layout.key_for_point(px_, py_)
+                            if (pc, pr) == (c, r):
+                                ix = int((px_ - xs[0] + layout.cell_width / 2) // layout.cell_width)
+                                iy = int((ys[0] - py_ + layout.cell_height / 2) // layout.cell_height)
+                                if 0 <= iy < shape[0] and 0 <= ix < shape[1]:
+                                    mask[iy, ix] = True
+                    else:
+                        gx, gy = np.meshgrid(xs, ys)
+                        mask = points_in_geometry(
+                            g, gx.ravel(), gy.ravel()
+                        ).reshape(shape)
+                    mask_cache[mkey] = mask
+                # apply boundary mask IN PLACE on the owned decode buffer
+                cube_vals[i, :, ~mask] = np.nan
+                totals[i] = int(mask.sum())
+            # vectorized per-(row, band) stats; temporaries are created
+            # one at a time and freed
+            valid = ~np.isnan(cube_vals)
+            cnt = valid.sum(axis=(2, 3))                   # (n, nb)
+            tmp = np.where(valid, cube_vals, 0.0)
+            sm = tmp.sum(axis=(2, 3))
+            tmp *= tmp
+            ssq = tmp.sum(axis=(2, 3))
+            np.copyto(tmp, cube_vals, where=valid)
+            np.copyto(tmp, np.inf, where=~valid)
+            mn = tmp.min(axis=(2, 3))
+            np.copyto(tmp, -np.inf, where=~valid)
+            mx = tmp.max(axis=(2, 3))
+            del tmp, valid
+            # emit only (row, band) cells with >=1 valid pixel in a
+            # non-empty zone — NaN partials would poison group min/max;
+            # dense restore fills the missing rows downstream
+            ri, bi = np.nonzero((cnt > 0) & (totals[:, None] > 0))
+            yield pd.DataFrame(
+                {
+                    **({"time": pdf["time"].to_numpy()[ri]} if temporal else {}),
+                    "feature_index": fis_a[ri],
+                    "band": bi.astype(np.int32),
+                    "cnt": cnt[ri, bi].astype(np.int64),
+                    "total": totals[ri],
+                    "sm": sm[ri, bi],
+                    "mn": mn[ri, bi],
+                    "mx": mx[ri, bi],
+                    "ssq": ssq[ri, bi],
+                }
+            )
 
-    part = joined.mapInPandas(partials, schema=_PARTIAL_SCHEMA)
+    part = joined.mapInPandas(partials, schema=_keyed(_PARTIAL_SCHEMA, temporal))
+    tkeys = ["time"] if temporal else []
 
-    agg = part.groupBy("time", "feature_index", "band").agg(
+    agg = part.groupBy(*tkeys, "feature_index", "band").agg(
         F.sum("cnt").alias("count"),
         F.sum("sm").alias("sum"),
         F.min("mn").alias("min"),
@@ -311,22 +324,12 @@ def aggregate_spatial(
         / (F.col("count") - 1),
     )
     stats = agg.select(
-        "time", "feature_index", "band", "count", "sum", "min", "max",
+        *tkeys, "feature_index", "band", "count", "sum", "min", "max",
         mean.alias("mean"),
         var.alias("variance"),
         F.sqrt(F.greatest(var, F.lit(0.0))).alias("sd"),
     )
-
-    # dense restore: every (date, feature, band) present even with 0 pixels
-    # (distinct_times uses the constructor's cheap pre-Python lineage when
-    # available — the full cube.df branch would re-run the opaque tile
-    # stage just to enumerate dates)
-    dates = cube.distinct_times()
-    bands_df = dates.sparkSession.range(n_bands).select(F.col("id").cast("int").alias("band"))
-    full = dates.crossJoin(F.broadcast(features.select("feature_index"))).crossJoin(
-        F.broadcast(bands_df)
-    )
-    out = full.join(stats, ["time", "feature_index", "band"], "left").withColumn(
+    out = _dense_restore(cube, features, stats).withColumn(
         "count", F.coalesce(F.col("count"), F.lit(0))
     )
     if round_to is not None:
@@ -463,8 +466,8 @@ def aggregate_spatial_weighted(
     joined = cube.df.join(fkeys, ["col", "row"], "inner")
 
     from ..core.geom import clipped_area
-    from ..core.grid import Extent as _Extent
-    from ..core.tiles import decode_tiles_batch_float
+
+    temporal = cube.meta.temporal
 
     def partials(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         geom_cache: dict[int, object] = {}
@@ -504,13 +507,8 @@ def aggregate_spatial_weighted(
             wq_cache[key] = wq
             return wq
 
-        for pdf in it:
+        for pdf, cube_vals in decoded_chunks(it, ct_name, shape, n_bands):
             nrow = len(pdf)
-            if nrow == 0:
-                continue
-            cube_vals = decode_tiles_batch_float(
-                pdf["bands"].tolist(), ct_name, shape, n_bands
-            )
             contained = pdf["contained"].to_numpy(dtype=bool)
             cols_a = pdf["col"].to_numpy()
             rows_a = pdf["row"].to_numpy()
@@ -543,14 +541,15 @@ def aggregate_spatial_weighted(
                 )
                 for b in range(n_bands):
                     if qcnt[b] > 0:
-                        out_rows["time"].append(pdf["time"].iloc[i])
+                        if temporal:
+                            out_rows["time"].append(pdf["time"].iloc[i])
                         out_rows["fi"].append(fi)
                         out_rows["band"].append(b)
                         out_rows["qcnt"].append(int(qcnt[b]))
                         out_rows["qsum"].append(int(qsum[b]))
             yield pd.DataFrame(
                 {
-                    "time": out_rows["time"],
+                    **({"time": out_rows["time"]} if temporal else {}),
                     "feature_index": np.array(out_rows["fi"], dtype=np.int32),
                     "band": np.array(out_rows["band"], dtype=np.int32),
                     "qcnt": np.array(out_rows["qcnt"], dtype=np.int64),
@@ -558,26 +557,20 @@ def aggregate_spatial_weighted(
                 }
             )
 
-    part = joined.mapInPandas(partials, schema=_WPARTIAL_SCHEMA)
-    agg = part.groupBy("time", "feature_index", "band").agg(
+    part = joined.mapInPandas(partials, schema=_keyed(_WPARTIAL_SCHEMA, temporal))
+    tkeys = ["time"] if temporal else []
+    agg = part.groupBy(*tkeys, "feature_index", "band").agg(
         F.sum("qcnt").alias("_qc"), F.sum("qsum").alias("_qs")
     )
     stats = agg.select(
-        "time",
+        *tkeys,
         "feature_index",
         "band",
         (F.col("_qc") / F.lit(1_000_000.0)).alias("wcount"),
         (F.col("_qs") / F.lit(1_000_000.0)).alias("wsum"),
         F.when(F.col("_qc") > 0, F.col("_qs") / F.col("_qc")).alias("wmean"),
     )
-    dates = cube.distinct_times()
-    bands_df = dates.sparkSession.range(n_bands).select(
-        F.col("id").cast("int").alias("band")
-    )
-    full = dates.crossJoin(F.broadcast(features.select("feature_index"))).crossJoin(
-        F.broadcast(bands_df)
-    )
-    out = full.join(stats, ["time", "feature_index", "band"], "left").withColumn(
+    out = _dense_restore(cube, features, stats).withColumn(
         "wcount", F.coalesce(F.col("wcount"), F.lit(0.0))
     )
     if round_to is not None:

@@ -13,7 +13,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..core.tiles import decode_tile_float
+from ..core.tiles import decoded_chunks
 from ..sources.datacube import DataCube
 
 
@@ -29,6 +29,7 @@ def cube_digest(cube: DataCube, round_to: int = 4) -> DataFrame:
     'yyyy-MM-dd' string when the cube is temporal."""
     ct = cube.meta.cell_type
     shape = cube.meta.tile_shape
+    n_bands = cube.meta.n_bands
     temporal = cube.meta.temporal
     cols = (["date"] if temporal else []) + ["col", "row", "band", "cnt", "sm", "mn", "mx"]
     fields = ("date string, " if temporal else "") + (
@@ -36,11 +37,10 @@ def cube_digest(cube: DataCube, round_to: int = 4) -> DataFrame:
     )
 
     def digest(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
+        for pdf, vals in decoded_chunks(it, ct, shape, n_bands):
             rows = []
-            for rec in pdf.itertuples(index=False):
-                stack = decode_tile_float(list(rec.bands), ct, shape)
-                for b in range(stack.shape[0]):
+            for rec, stack in zip(pdf.itertuples(index=False), vals):
+                for b in range(n_bands):
                     v = stack[b][~np.isnan(stack[b])]
                     base = ([rec.time.strftime("%Y-%m-%d")] if temporal else []) + [
                         int(rec.col), int(rec.row), b

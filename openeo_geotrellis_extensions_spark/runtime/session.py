@@ -39,8 +39,3 @@ def get_spark(
         b = b.config(k, v)
     return b.getOrCreate()
 
-
-def stop_spark() -> None:
-    s = SparkSession.getActiveSession()
-    if s is not None:
-        s.stop()

@@ -30,7 +30,7 @@ import pandas as pd
 
 from ..core.celltype import parse_cell_type
 from ..core.grid import Extent
-from ..core.tiles import decode_tile_float, encode_band
+from ..core.tiles import encode_tiles_batch, paste_tiles
 from ..sources.datacube import DataCube
 
 _SAMPLE_FORMAT = {"u": 1, "i": 2, "f": 3}
@@ -366,15 +366,13 @@ def save_stitched_geotiff(
     H = ld.layout_rows * ld.tile_rows
     W = ld.layout_cols * ld.tile_cols
     nb = cube.meta.n_bands
-    full = np.full((nb, H, W), np.nan)
-    for r in df.collect():
-        stack = decode_tile_float(list(r.bands), ct, cube.meta.tile_shape)
-        full[
-            :,
-            r.row * ld.tile_rows : (r.row + 1) * ld.tile_rows,
-            r.col * ld.tile_cols : (r.col + 1) * ld.tile_cols,
-        ] = stack
-    out = np.stack([ct.from_float_nan(full[b]) for b in range(nb)])
+    rows = df.select("col", "row", "bands").collect()
+    full = paste_tiles(
+        np.full((nb, H, W), np.nan), [r.bands for r in rows],
+        [(r.row * ld.tile_rows, r.col * ld.tile_cols) for r in rows],
+        ct, cube.meta.tile_shape,
+    )
+    out = ct.from_float_nan(full)
     write_geotiff(path, out, ld.extent, nodata=ct.nodata,
                   rows_per_strip=rows_per_strip)
     return path
@@ -404,13 +402,13 @@ def save_geotiff_tiles(
     def write_group(pdf: pd.DataFrame) -> pd.DataFrame:
         gc, gr = int(pdf["gcol"].iloc[0]), int(pdf["grow"].iloc[0])
         date = pdf["time"].iloc[0].strftime("%Y-%m-%d") if temporal else "static"
-        full = np.full((nb, grid * th, grid * tw), np.nan)
-        for rec in pdf.itertuples(index=False):
-            stack = decode_tile_float(list(rec.bands), ct, (th, tw))
-            ro = (int(rec.row) - gr * grid) * th
-            co = (int(rec.col) - gc * grid) * tw
-            full[:, ro : ro + th, co : co + tw] = stack
-        out = np.stack([ct.from_float_nan(full[b]) for b in range(nb)])
+        full = paste_tiles(
+            np.full((nb, grid * th, grid * tw), np.nan), pdf["bands"],
+            zip((pdf["row"].to_numpy() - gr * grid) * th,
+                (pdf["col"].to_numpy() - gc * grid) * tw),
+            ct, (th, tw),
+        )
+        out = ct.from_float_nan(full)
         x0 = ld.extent.xmin + gc * grid * ld.tile_width
         y1 = ld.extent.ymax - gr * grid * ld.tile_height
         ext = Extent(x0, y1 - grid * ld.tile_height, x0 + grid * ld.tile_width, y1)
@@ -462,13 +460,12 @@ def save_sample_geotiffs(cube: DataCube, features, out_dir: str) -> pd.DataFrame
         c0, r0 = int(pdf["_fc0"].iloc[0]), int(pdf["_fr0"].iloc[0])
         nc = int(pdf["_fc1"].iloc[0]) - c0 + 1
         nr = int(pdf["_fr1"].iloc[0]) - r0 + 1
-        full = np.full((nb, nr * th, nc * tw), np.nan)
-        for rec in pdf.itertuples(index=False):
-            stack = decode_tile_float(list(rec.bands), ct, (th, tw))
-            ro = (int(rec.row) - r0) * th
-            co = (int(rec.col) - c0) * tw
-            full[:, ro : ro + th, co : co + tw] = stack
-        out = np.stack([ct.from_float_nan(full[b]) for b in range(nb)])
+        full = paste_tiles(
+            np.full((nb, nr * th, nc * tw), np.nan), pdf["bands"],
+            zip((pdf["row"].to_numpy() - r0) * th, (pdf["col"].to_numpy() - c0) * tw),
+            ct, (th, tw),
+        )
+        out = ct.from_float_nan(full)
         x0 = ld.extent.xmin + c0 * ld.tile_width
         y1 = ld.extent.ymax - r0 * ld.tile_height
         ext = Extent(x0, y1 - nr * ld.tile_height, x0 + nc * ld.tile_width, y1)
@@ -526,14 +523,11 @@ def load_geotiff(spark, path: str, layout) -> DataCube:
                 band_rows = chunk[local0 : local0 + th].astype(np.float64)
                 if nodata is not None and not np.isnan(nodata):
                     band_rows = np.where(band_rows == nodata, np.nan, band_rows)
-                for c in range(layout_cols):
-                    tiles = [
-                        band_rows[:, c * tw : (c + 1) * tw, b] for b in range(nb)
-                    ]
-                    if all(np.isnan(t).all() for t in tiles):
-                        continue
-                    bands = [encode_band(out_ct.from_float_nan(t), out_ct) for t in tiles]
-                    rows.append((c, r, bands))
+                # (th, W, nb) strip -> (layout_cols, nb, th, tw) tiles
+                tiles = band_rows.reshape(th, layout_cols, tw, nb).transpose(1, 3, 0, 2)
+                keep = np.nonzero(~np.isnan(tiles).all(axis=(1, 2, 3)))[0]
+                rows += zip(keep.tolist(), [r] * len(keep),
+                            encode_tiles_batch(tiles[keep], out_ct))
             yield pd.DataFrame(rows, columns=["col", "row", "bands"])
 
     tasks = spark.range(ld.layout_rows).select(

@@ -22,7 +22,7 @@ import numpy as np
 import pandas as pd
 
 from ..core.celltype import parse_cell_type
-from ..core.tiles import decode_tile_float, encode_band
+from ..core.tiles import encode_tiles_batch, paste_tiles
 from ..operators.zonal import feature_tile_keys
 from ..sources.datacube import DataCube
 from .netcdf_format import (
@@ -131,12 +131,14 @@ def save_netcdf(cube: DataCube, path: str) -> str:
             "use save_samples (distributed, one file per feature)"
         )
     tpos = {t: i for i, t in enumerate(times)}
-    data = np.full((len(times), nb, ny, nx), np.nan)
-    for rec in rows:
-        stack = decode_tile_float(list(rec.bands), ct, (th, tw))
-        ti = tpos[rec.time] if temporal else 0
-        ro, co = (rec.row - r0) * th, (rec.col - c0) * tw
-        data[ti, :, ro : ro + th, co : co + tw] = stack
+    data = paste_tiles(
+        np.full((len(times), nb, ny, nx), np.nan), [r.bands for r in rows],
+        [
+            (tpos[r.time] if temporal else 0, (r.row - r0) * th, (r.col - c0) * tw)
+            for r in rows
+        ],
+        ct, (th, tw),
+    )
     x0 = ld.extent.xmin + c0 * ld.tile_width
     y1 = ld.extent.ymax - r0 * ld.tile_height
     coords = {
@@ -183,13 +185,12 @@ def save_samples(cube: DataCube, features, out_dir: str) -> pd.DataFrame:
         nc = int(pdf["_fc1"].iloc[0]) - c0 + 1
         nr = int(pdf["_fr1"].iloc[0]) - r0 + 1
         ny, nx = nr * th, nc * tw
-        data = np.full((len(times), nb, ny, nx), np.nan)
-        for rec in pdf.itertuples(index=False):
-            stack = decode_tile_float(list(rec.bands), ct, (th, tw))
-            ti = tpos[rec.time]
-            ro = (int(rec.row) - r0) * th
-            co = (int(rec.col) - c0) * tw
-            data[ti, :, ro : ro + th, co : co + tw] = stack
+        data = paste_tiles(
+            np.full((len(times), nb, ny, nx), np.nan), pdf["bands"],
+            zip([tpos[t] for t in pdf["time"]], (pdf["row"].to_numpy() - r0) * th,
+                (pdf["col"].to_numpy() - c0) * tw),
+            ct, (th, tw),
+        )
         x0 = ld.extent.xmin + c0 * ld.tile_width
         y1 = ld.extent.ymax - r0 * ld.tile_height
         path = os.path.join(out_dir, f"sample_{fi}.nc")
@@ -269,14 +270,11 @@ def load_netcdf(spark, path: str, layout, dates: list | None = None) -> DataCube
                     if fill is not None:
                         strip = np.where(strip == fill, np.nan, strip)
                     strips.append(strip)
-                for c in range(layout_cols):
-                    tiles = [s[:, c * tw : (c + 1) * tw] for s in strips]
-                    if all(np.isnan(t).all() for t in tiles):
-                        continue
-                    bands = [
-                        encode_band(ct.from_float_nan(t), ct) for t in tiles
-                    ]
-                    rows.append((times[ti], c, r, bands))
+                # (nb, th, W) strips -> (layout_cols, nb, th, tw) tiles
+                tiles = np.stack(strips).reshape(nb, th, layout_cols, tw).transpose(2, 0, 1, 3)
+                keep = np.nonzero(~np.isnan(tiles).all(axis=(1, 2, 3)))[0]
+                rows += zip([times[ti]] * len(keep), keep.tolist(), [r] * len(keep),
+                            encode_tiles_batch(tiles[keep], ct))
             yield pd.DataFrame(rows, columns=["time", "col", "row", "bands"])
 
     tasks = spark.range(nt * ld.layout_rows).select(

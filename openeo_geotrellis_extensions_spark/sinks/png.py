@@ -12,8 +12,7 @@ import zlib
 
 import numpy as np
 
-from ..core.celltype import parse_cell_type
-from ..core.tiles import decode_tile_float
+from ..core.tiles import paste_tiles
 from ..sources.datacube import DataCube
 
 
@@ -183,23 +182,21 @@ def save_png(cube: DataCube, path: str, date: str | None = None,
              band: int = 0, vmin: float = 0.0, vmax: float = 100.0) -> str:
     """Stitch one date's single band, linear-rescale to 0..255, write PNG
     (nodata -> 0)."""
+    from pyspark.sql import functions as F
+
     ld = cube.meta.layout
-    ct = parse_cell_type(cube.meta.cell_type)
     df = cube.df
     if cube.meta.temporal:
-        from pyspark.sql import functions as F
-
         date = date or str(df.agg(F.min("time")).collect()[0][0].date())
         df = df.where(F.to_date("time") == date)
     H = ld.layout_rows * ld.tile_rows
     W = ld.layout_cols * ld.tile_cols
-    full = np.full((H, W), np.nan)
-    for r in df.collect():
-        stack = decode_tile_float(list(r.bands), ct, cube.meta.tile_shape)
-        full[
-            r.row * ld.tile_rows : (r.row + 1) * ld.tile_rows,
-            r.col * ld.tile_cols : (r.col + 1) * ld.tile_cols,
-        ] = stack[band]
+    rows = df.select("col", "row", F.array(F.col("bands")[band]).alias("bands")).collect()
+    full = paste_tiles(
+        np.full((1, H, W), np.nan), [r.bands for r in rows],
+        [(r.row * ld.tile_rows, r.col * ld.tile_cols) for r in rows],
+        cube.meta.cell_type, cube.meta.tile_shape,
+    )[0]
     scaled = np.clip((full - vmin) / max(vmax - vmin, 1e-9) * 255, 0, 255)
     scaled = np.nan_to_num(scaled, nan=0.0).astype(np.uint8)
     write_png(path, scaled)

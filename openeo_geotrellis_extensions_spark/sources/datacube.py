@@ -37,7 +37,7 @@ from pyspark.sql.types import (
 
 from ..core.celltype import parse_cell_type
 from ..core.grid import LayoutDefinition
-from ..core.tiles import decode_tile_float, encode_band
+from ..core.tiles import encode_band
 from .interleaved import (
     DATES,
     MEDIA_CELL_TYPE,
@@ -94,14 +94,6 @@ class DataCube:
 
     def with_meta(self, **kw) -> "DataCube":
         return DataCube(self.df, replace(self.meta, **kw))
-
-    def decode_partition(self, pdf: pd.DataFrame) -> np.ndarray:
-        """(n_rows, n_bands, h, w) float64 NaN-nodata stack for a pandas batch."""
-        ct = self.meta.cell_type
-        shape = self.meta.tile_shape
-        return np.stack(
-            [decode_tile_float(list(b), ct, shape) for b in pdf["bands"]]
-        )
 
 
 def cube_schema(temporal: bool) -> StructType:

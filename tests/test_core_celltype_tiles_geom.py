@@ -27,10 +27,12 @@ from openeo_geotrellis_extensions_spark.core.geom import (
 )
 from openeo_geotrellis_extensions_spark.core.grid import Extent
 from openeo_geotrellis_extensions_spark.core.tiles import (
+    CHUNK_ELEMENTS,
     EMPTY,
     decode_band,
     decode_tile_float,
     encode_band,
+    row_chunks,
 )
 
 
@@ -94,6 +96,48 @@ def test_decode_tile_float_nan():
     assert np.isnan(stack[0, 0, 1])
     assert stack[0, 1, 1] == 4
     assert np.isnan(stack[1]).all()
+
+
+@pytest.mark.parametrize("n_bands", [1, 2, 4, 13])
+def test_row_chunks_cap_elements_for_256px_tiles(n_bands):
+    """The shared chunk bound keeps every decoded 256x256 multiband chunk at
+    or below CHUNK_ELEMENTS float64 values and covers all rows in order."""
+    shape = (256, 256)
+    n_rows = 10_000
+    chunks = list(row_chunks(n_rows, n_bands, shape))
+    assert chunks[0].start == 0 and chunks[-1].stop == n_rows
+    assert all(a.stop == b.start for a, b in zip(chunks, chunks[1:]))
+    per_row = n_bands * shape[0] * shape[1]
+    assert all(0 < (c.stop - c.start) * per_row <= CHUNK_ELEMENTS for c in chunks)
+    assert len(chunks) == -(-n_rows // (CHUNK_ELEMENTS // per_row))
+
+
+def test_row_chunks_one_row_when_tile_exceeds_bound():
+    chunks = list(row_chunks(3, 200, (256, 256)))
+    assert [(c.start, c.stop) for c in chunks] == [(0, 1), (1, 2), (2, 3)]
+
+
+def test_no_per_row_codec_outside_core():
+    """Operators, functions, sinks and plans go through the batch codec:
+    none of them imports the per-row helpers."""
+    import ast
+    import pathlib
+
+    import openeo_geotrellis_extensions_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    banned = {"decode_tile_float", "decode_band", "encode_band"}
+    offenders = []
+    for sub in ("operators", "functions", "sinks", "plans"):
+        for path in sorted((root / sub).rglob("*.py")):
+            for node in ast.walk(ast.parse(path.read_text())):
+                names = set()
+                if isinstance(node, ast.ImportFrom):
+                    names = {a.name for a in node.names}
+                elif isinstance(node, ast.Attribute):
+                    names = {node.attr}
+                offenders += [f"{path.relative_to(root)}: {n}" for n in names & banned]
+    assert offenders == []
 
 
 # -- geometry ---------------------------------------------------------------

@@ -20,6 +20,7 @@ from openeo_geotrellis_extensions_spark.operators.filters import (
     filter_bands,
     filter_bbox,
     filter_empty_tiles,
+    filter_negative_keys,
     filter_temporal,
 )
 from openeo_geotrellis_extensions_spark.operators.mask import mask, mask_polygon
@@ -265,6 +266,23 @@ def test_filter_empty_tiles(spark):
     assert filter_empty_tiles(cube).df.count() == 0
     cube2 = constant_cube(spark, LAYOUT, band_values=[1, None], cell_type="uint8ud255")
     assert filter_empty_tiles(cube2).df.count() == cube2.df.count()
+
+
+def test_filter_negative_keys(spark):
+    """Keys at -1 and at layout_cols / layout_rows (what resampling can
+    produce) are dropped; in-grid keys survive with their pixels."""
+    cube = constant_cube(spark, LAYOUT, band_values=[10], cell_type="uint8ud255")
+    off_grid = [(-1, 0), (0, -1), (LAYOUT.layout_cols, 0), (0, LAYOUT.layout_rows),
+                (LAYOUT.layout_cols, LAYOUT.layout_rows)]
+    extra = cube.df.where((F.col("col") == 0) & (F.col("row") == 0)).drop("col", "row")
+    extra = extra.crossJoin(spark.createDataFrame(off_grid, "col int, row int"))
+    wide = cube.with_df(cube.df.unionByName(extra))
+    assert wide.df.count() == cube.df.count() + len(off_grid) * len(DATES)
+    kept = filter_negative_keys(wide)
+    keys = {(r.col, r.row) for r in kept.df.select("col", "row").distinct().collect()}
+    assert keys == {(c, r) for c in range(2) for r in range(2)}
+    assert kept.df.count() == cube.df.count()
+    assert all((t == 10).all() for t in tiles_of(kept).values())
 
 
 def test_mask_absent_tile_keeps_data_even_with_pruning(spark):

@@ -19,7 +19,14 @@ from openeo_geotrellis_extensions_spark.core.grid import (
     GlobalGrid,
     LayoutDefinition,
 )
-from openeo_geotrellis_extensions_spark.core.tiles import decode_band, encode_band
+from openeo_geotrellis_extensions_spark.core.tiles import (
+    EMPTY,
+    decode_band,
+    decode_tile_float,
+    decode_tiles_batch_float,
+    encode_band,
+    encode_tiles_batch,
+)
 
 CT_NAMES = ["uint8", "uint8raw", "uint8ud255", "int8", "uint16", "int16",
             "int32", "float32", "float64"]
@@ -81,6 +88,69 @@ def test_tile_codec_roundtrip(ct_name, fill, h, w):
     arr = np.full((h, w), fill % 120, dtype=ct.dtype)
     back = decode_band(encode_band(arr, ct), ct, (h, w))
     np.testing.assert_array_equal(arr, back)
+
+
+#: every cell-type family: raw, default nodata, user nodata (int and float)
+CODEC_CT_NAMES = CT_NAMES + ["int16raw", "int32raw", "float32raw", "uint16ud7",
+                             "int16ud-9999", "float32ud-1", "float64ud0"]
+
+
+def _ref_encode(x, ct):
+    """Per-band reference rule: float/NaN -> cell values; an all-nodata
+    band is the EMPTY marker."""
+    a = ct.from_float_nan(x)
+    if ct.has_nodata and not ct.valid_mask(a).any():
+        return EMPTY
+    return a.tobytes()
+
+
+def _ref_decode(bufs, ct, shape, n_bands):
+    """Per-band reference decode; missing and EMPTY bands are all-nodata."""
+    out = np.empty((n_bands, *shape))
+    for b in range(n_bands):
+        buf = bufs[b] if b < len(bufs) else None
+        if not buf:
+            out[b] = np.nan if ct.has_nodata else 0.0
+        else:
+            out[b] = ct.to_float_nan(np.frombuffer(buf, dtype=ct.dtype).reshape(shape))
+    return out
+
+
+@given(
+    st.sampled_from(CODEC_CT_NAMES),
+    st.integers(1, 5), st.integers(1, 3), st.integers(1, 6), st.integers(1, 6),
+    st.integers(0, 2**31),
+)
+@settings(max_examples=150, deadline=None)
+def test_tile_codec_batch_matches_per_band(ct_name, n, nb, h, w, seed):
+    """The batch encoder is byte-equal to the per-band rule (and to
+    ``encode_band(from_float_nan(x))``); the batch decoder equals the
+    per-band decode and ``decode_tile_float``, including all-NaN bands
+    (-> EMPTY) and band lists shorter than ``n_bands``."""
+    ct = parse_cell_type(ct_name)
+    rng = np.random.default_rng(seed)
+    x = np.round(rng.uniform(0, 120, (n, nb, h, w)), 1)
+    x[rng.random(x.shape) < 0.3] = np.nan
+    x[rng.random((n, nb)) < 0.3] = np.nan  # whole all-nodata bands
+    enc = encode_tiles_batch(x, ct)
+    assert [len(r) for r in enc] == [nb] * n
+    for i in range(n):
+        for b in range(nb):
+            assert enc[i][b] == _ref_encode(x[i, b], ct)
+            assert enc[i][b] == encode_band(ct.from_float_nan(x[i, b]), ct)
+        # NaN encodes to the nodata value, so all-NaN bands are EMPTY
+        # (float user-nodata types keep NaN cells as NaN instead)
+        if ct.has_nodata and (not ct.is_float or np.isnan(ct.nodata)):
+            assert all((e == EMPTY) == np.isnan(x[i, b]).all()
+                       for b, e in enumerate(enc[i]))
+    # truncate some rows' band lists: missing trailing bands are nodata
+    lists = [r[: rng.integers(0, nb + 1)] if i % 2 else r for i, r in enumerate(enc)]
+    got = decode_tiles_batch_float(lists, ct, (h, w), nb)
+    assert got.shape == (n, nb, h, w)
+    for i, bufs in enumerate(lists):
+        np.testing.assert_array_equal(got[i], _ref_decode(bufs, ct, (h, w), nb))
+        if len(bufs) == nb:
+            np.testing.assert_array_equal(got[i], decode_tile_float(bufs, ct, (h, w)))
 
 
 @given(

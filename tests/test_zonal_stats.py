@@ -253,3 +253,32 @@ def test_scanline_cover_areas_matches_per_pixel_clip():
         # exact area check: sum of fractional coverages == polygon area
         want = clipped_area(g, te)
         assert areas.sum() == pytest.approx(want, rel=1e-12), gj
+
+
+def test_aggregate_spatial_accepts_spatial_only_cube(spark, features_df):
+    """reduce_time -> aggregate_spatial: a spatial-only cube has no ``time``
+    column, so the partials, the groupBy and the dense restore key on
+    (feature, band) only — both the center-rule and the weighted variant."""
+    from openeo_geotrellis_extensions_spark.operators.apply_process import reduce_time
+    from openeo_geotrellis_extensions_spark.operators.zonal import (
+        aggregate_spatial_weighted,
+    )
+
+    cube = reduce_time(constant_cube(spark, LAYOUT), "mean")
+    assert not cube.meta.temporal
+    out = aggregate_spatial(cube, features_df)
+    assert "time" not in out.columns
+    by = {(r.feature_index, r.band): r for r in out.collect()}
+    assert len(by) == len(FEATURES) * 2  # dense over (feature, band)
+    assert by[(0, 0)]["count"] == 256 and by[(0, 0)].mean == pytest.approx(10.0)
+    assert by[(0, 1)]["count"] == 0 and by[(0, 1)].mean is None
+    assert by[(2, 0)]["count"] == 0
+    assert by[(3, 0)]["count"] == 1
+
+    w = aggregate_spatial_weighted(cube, features_df)
+    assert "time" not in w.columns
+    wby = {(r.feature_index, r.band): r for r in w.collect()}
+    assert len(wby) == len(FEATURES) * 2
+    assert wby[(0, 0)].wmean == pytest.approx(10.0)
+    assert wby[(0, 0)].wcount == pytest.approx(256.0, abs=1e-3)
+    assert wby[(2, 0)].wcount == 0.0
