@@ -424,6 +424,15 @@ def clipped_area(geom: Geometry, e: Extent) -> float:
     return max(total, 0.0)
 
 
+def is_rect(geom: Geometry) -> bool:
+    """True when the geometry fills its bounding box: an axis-aligned
+    rectangle, or a degenerate geometry (a point, a zero-area ring) whose
+    box has no area either."""
+    bb = geom.bbox()
+    area = bb.width * bb.height
+    return abs(clipped_area(geom, bb) - area) <= 1e-9 * max(1.0, area)
+
+
 def reproject_geometry(
     geom: Geometry, src_crs: str, dst_crs: str, densify: int = 0
 ) -> Geometry:

@@ -17,7 +17,6 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from ..core.celltype import parse_cell_type
-from ..core.geom import parse_geometry, rasterize as raster_mask
 from ..core.tiles import (
     decode_tiles_batch_float,
     decoded_chunks,
@@ -27,7 +26,7 @@ from ..core.tiles import (
 from ..sources.datacube import DataCube
 from .kernel import apply_kernel
 from .mask import mask as mask_op
-from .zonal import feature_tile_keys
+from .features import feature_geoms, feature_tile_keys, tile_mask
 
 
 def to_scl_dilation_mask(
@@ -92,13 +91,11 @@ def chunk_polygon(
     shape = cube.meta.tile_shape
     n_bands = cube.meta.n_bands
     fkeys = F.broadcast(feature_tile_keys(features, layout))
-    joined = cube.df.join(fkeys, ["col", "row"], "inner").join(
-        F.broadcast(features), "feature_index", "inner"
-    )
+    joined = cube.df.join(fkeys, ["col", "row"], "inner")
+    geoms = feature_geoms(features)
 
     def per_chunk(pdf: pd.DataFrame) -> pd.DataFrame:
         fi = int(pdf["feature_index"].iloc[0])
-        g = parse_geometry(pdf["geojson"].iloc[0])
         rows = []
         # the callback sees the FULL time stack per tile (t, bands, h, w) —
         # the xarray chunk contract of runChunkPolygonUserCode
@@ -108,8 +105,7 @@ def chunk_polygon(
                 grp["bands"].tolist(), ct, shape, n_bands
             )  # (T, bands, h, w)
             if mask_outside and not grp["contained"].iloc[0]:
-                xs, ys = layout.pixel_centers_for_key(int(c), int(r))
-                inside = raster_mask(g, xs, ys)
+                inside = tile_mask(geoms[fi], layout, int(c), int(r))
                 stack = np.where(inside[None, None], stack, np.nan)
             res = np.asarray(fn(stack, fi), dtype=np.float64)
             if res.shape != stack.shape:

@@ -21,7 +21,6 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from ..core.celltype import parse_cell_type
-from ..core.geom import parse_geometry, rasterize
 from ..core.tiles import (
     decode_tiles_batch_float,
     decoded_chunks,
@@ -29,7 +28,7 @@ from ..core.tiles import (
     row_chunks,
 )
 from ..sources.datacube import DataCube
-from .zonal import feature_tile_keys
+from .features import feature_geoms, feature_tile_keys, tile_mask
 
 
 def _decode_mask(mask_bands, cell_type: str, shape) -> np.ndarray:
@@ -126,21 +125,15 @@ def mask_polygon(
         F.max("contained").alias("contained"),
         F.collect_set("feature_index").alias("fis"),
     )
-    joined = cube.df.join(F.broadcast(key_info), ["col", "row"], "inner").join(
-        F.broadcast(
-            features.groupBy().agg(
-                F.collect_list(F.struct("feature_index", "geojson")).alias("feats")
-            )
-        ),
-    )
+    joined = cube.df.join(F.broadcast(key_info), ["col", "row"], "inner")
+    geoms = feature_geoms(features)
     out_schema = cube.df.schema
 
     def apply_mask(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         repl = np.nan if replacement is None else float(replacement)
-        geom_cache: dict[int, object] = {}
         mask_cache: dict[tuple, np.ndarray] = {}
 
-        def inside_mask(c: int, r: int, contained, fis, feats) -> np.ndarray:
+        def inside_mask(c: int, r: int, contained, fis) -> np.ndarray:
             m = mask_cache.get((c, r))
             if m is not None:
                 return m
@@ -148,31 +141,22 @@ def mask_polygon(
                 m = np.ones(shape, dtype=bool)
             else:
                 m = np.zeros(shape, dtype=bool)
-                xs, ys = layout.pixel_centers_for_key(c, r)
                 for fi in fis:
-                    g = geom_cache.get(int(fi))
-                    if g is None:
-                        gj = next(
-                            f["geojson"] for f in feats if f["feature_index"] == fi
-                        )
-                        g = parse_geometry(gj)
-                        geom_cache[int(fi)] = g
-                    m |= rasterize(g, xs, ys)
+                    m |= tile_mask(geoms[fi], layout, c, r)
             mask_cache[(c, r)] = m
             return m
 
         for pdf, vals in decoded_chunks(it, ct, shape, n_bands):
             inside_m = np.stack(
                 [
-                    inside_mask(int(c), int(r), contained, fis, feats)
-                    for c, r, contained, fis, feats in zip(
-                        pdf["col"], pdf["row"], pdf["contained"], pdf["fis"],
-                        pdf["feats"],
+                    inside_mask(int(c), int(r), contained, fis)
+                    for c, r, contained, fis in zip(
+                        pdf["col"], pdf["row"], pdf["contained"], pdf["fis"]
                     )
                 ]
             )
             hide = inside_m if inside else ~inside_m
-            res = pdf.drop(columns=["contained", "fis", "feats"])
+            res = pdf.drop(columns=["contained", "fis"])
             res["bands"] = encode_tiles_batch(
                 np.where(hide[:, None], repl, vals), out_ct
             )

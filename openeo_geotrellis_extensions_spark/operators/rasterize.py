@@ -24,11 +24,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..core.celltype import parse_cell_type
-from ..core.geom import parse_geometry, rasterize as raster_mask
 from ..core.grid import LayoutDefinition
 from ..core.tiles import decoded_chunks, encode_tiles_batch
 from ..sources.datacube import CubeMeta, DataCube
-from .zonal import feature_tile_keys
+from .features import feature_geoms, feature_tile_keys, tile_mask
 
 
 def rasterize_features(
@@ -43,20 +42,19 @@ def rasterize_features(
     ct = parse_cell_type(cell_type)
     th, tw = layout.tile_rows, layout.tile_cols
     fkeys = feature_tile_keys(features, layout)
-    joined = fkeys.join(F.broadcast(features), "feature_index")
+    joined = fkeys.join(F.broadcast(features.drop("geojson")), "feature_index")
+    geoms = feature_geoms(features)
     vcol = value_col or "feature_index"
 
     def burn(pdf: pd.DataFrame) -> pd.DataFrame:
         c = int(pdf["col"].iloc[0])
         r = int(pdf["row"].iloc[0])
-        xs, ys = layout.pixel_centers_for_key(c, r)
         out = np.full((th, tw), np.nan)
         for rec in pdf.sort_values("feature_index").itertuples(index=False):
             if rec.contained:
                 m = np.ones((th, tw), dtype=bool)
             else:
-                g = parse_geometry(rec.geojson)
-                m = raster_mask(g, xs, ys)
+                m = tile_mask(geoms[rec.feature_index], layout, c, r)
             out[m] = float(getattr(rec, vcol))
         return pd.DataFrame(
             [(c, r, encode_tiles_batch(out[None, None], ct)[0])],

@@ -9,8 +9,8 @@ Pattern (BASELINE north_star):
   2. points -> cell id at the same resolution (vectorized arithmetic);
   3. equi-join on ``cell`` — Catalyst picks broadcast-hash when the cover
      side is small, AQE splits skewed hot cells otherwise;
-  4. refine: Arrow-batched vectorized point-in-polygon, with a per-batch
-     geometry parse cache (one parse per feature per batch, not per row).
+  4. refine: Arrow-batched vectorized point-in-polygon against the
+     geometries of :func:`operators.features.feature_geoms`.
 
 No custom partitioner, no RDDs: the cell id is an ordinary int64 column, so
 partition pruning / AQE / broadcast all apply natively (SURVEY §4).
@@ -36,10 +36,12 @@ from pyspark.sql.types import (
 from ..core.geom import (
     classify_rect,
     clipped_area,
+    is_rect,
     parse_geometry,
     points_in_geometry,
 )
 from ..core.grid import GlobalGrid
+from .features import feature_geoms, parse_feature
 
 
 def cell_for_point_col(res: int, x: Column, y: Column) -> Column:
@@ -169,8 +171,7 @@ def _cover_from(g, start_cell: int, res: int) -> list[tuple[int, bool]]:
 
 
 def cover_cells_for_features(
-    features: DataFrame, res: int, split_res: int = 2,
-    shuffle_split: bool = False,
+    features: DataFrame, res: int, split_res: int = 2
 ) -> DataFrame:
     """(feature_index, geojson) -> (feature_index, cell, contained) at
     resolution ``res`` via compact cover + uncompact. ``contained`` cells are
@@ -179,18 +180,16 @@ def cover_cells_for_features(
 
     Two pipelined stages: stage 1 explodes each feature into the coarse
     (``split_res``) cells its bbox touches; stage 2 computes the compact
-    cover independently per coarse cell. With ``shuffle_split=True`` a
-    repartition between them spreads a continent-sized polygon across tasks
-    (use at high executor counts / few huge features); default is
-    shuffle-free — the split rows stay with their feature's partition, so
-    parallelism follows the features DataFrame's own partitioning."""
+    cover independently per coarse cell. Shuffle-free: the split rows stay
+    with their feature's partition, so parallelism follows the features
+    DataFrame's own partitioning."""
     split_res = min(split_res, res)
 
     def split(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             fis, gjs, cells = [], [], []
             for fi, gj in zip(pdf["feature_index"], pdf["geojson"]):
-                g = parse_geometry(gj)
+                g = parse_feature(gj)
                 if g is None:
                     continue
                 if g.kind in ("Point", "MultiPoint"):
@@ -206,20 +205,14 @@ def cover_cells_for_features(
     exploded = features.mapInPandas(
         split, schema="feature_index int, geojson string, split_cell long"
     )
-    if shuffle_split:
-        exploded = exploded.repartition(F.col("split_cell"), F.col("feature_index"))
 
     def cover(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        geom_cache: dict[int, object] = {}
         for pdf in it:
             out_f, out_c, out_k = [], [], []
             for fi, gj, sc in zip(
                 pdf["feature_index"], pdf["geojson"], pdf["split_cell"]
             ):
-                g = geom_cache.get(int(fi))
-                if g is None:
-                    g = parse_geometry(gj)
-                    geom_cache[int(fi)] = g
+                g = parse_feature(gj)
                 if g.kind in ("Point", "MultiPoint"):
                     for c in set(
                         int(c) for c in GlobalGrid.cell_for_point(
@@ -251,28 +244,20 @@ def spatial_join_points(
     the reference's per-covering-polygon emit, AggregatePolygonProcess.scala:287-306).
     """
     cover = cover_cells_for_features(features, res)
+    geoms = None
     if broadcast_features:
-        cover = F.broadcast(cover)
         # features are small by contract on this path (they already fit a
-        # broadcast): collect the geojson map ONCE on the driver and close
-        # over it, instead of joining geojson onto EVERY candidate row —
-        # the per-row feature text would otherwise ride the whole Arrow
-        # stream into the refine UDF (guide §4.1: pass only the columns
-        # the function needs)
-        feat_map = {
-            int(r["feature_index"]): r["geojson"]
-            for r in features.select("feature_index", "geojson").collect()
-        }
-    else:
-        feat_map = None
-        feat = features
+        # broadcast): close over them instead of joining geojson onto EVERY
+        # candidate row
+        cover = F.broadcast(cover)
+        geoms = feature_geoms(features)
     pts = points.withColumn("cell", cell_for_point_col(res, F.col(x_col), F.col(y_col)))
     # single pipeline: candidates keep the contained flag; PIP runs only on
     # boundary-cell rows (interior 'contained' rows short-circuit in the UDF,
     # avoiding a union of two branches that would re-execute the upstream DAG)
     cand = pts.join(cover, "cell", "inner").drop("cell")
-    if feat_map is None:
-        cand = cand.join(feat, "feature_index", "inner")
+    if geoms is None:
+        cand = cand.join(features, "feature_index", "inner")
 
     out_schema = StructType(
         [f for f in cand.schema.fields if f.name not in ("geojson", "contained")]
@@ -280,7 +265,6 @@ def spatial_join_points(
     names = [f.name for f in out_schema.fields]
 
     def refine(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cache: dict[int, object] = {}
         for pdf in it:
             if len(pdf) == 0:
                 continue
@@ -290,14 +274,12 @@ def spatial_join_points(
             ys = pdf[y_col].to_numpy(dtype=np.float64)
             fis = pdf["feature_index"].to_numpy()
             for fi in np.unique(fis[todo]):
-                g = cache.get(int(fi))
-                if g is None:
-                    if feat_map is not None:
-                        gj = feat_map[int(fi)]
-                    else:
-                        gj = pdf.loc[pdf["feature_index"] == fi, "geojson"].iloc[0]
-                    g = parse_geometry(gj)
-                    cache[int(fi)] = g
+                if geoms is not None:
+                    g = geoms[fi]
+                else:  # the geojson rides each candidate row
+                    g = parse_feature(
+                        pdf.loc[pdf["feature_index"] == fi, "geojson"].iloc[0]
+                    )
                 m = todo & (fis == fi)
                 keep[m] = points_in_geometry(g, xs[m], ys[m])
             yield pdf.loc[keep, names]
@@ -359,8 +341,6 @@ def polygon_overlap_join(
     against the feature. Features must be CONVEX single-ring polygons (the
     clip window; verified per feature, non-convex features raise);
     axis-aligned rectangles take the cheaper 4-half-plane path."""
-    from ..core.grid import Extent as _Extent
-
     cover = cover_cells_for_features(features, res).select(
         "feature_index", "cell"
     )
@@ -397,11 +377,8 @@ def polygon_overlap_join(
                 win = windows.get(int(fi))
                 if win is None:
                     fg = parse_geometry(fgj)
-                    bb = fg.bbox()
-                    if abs(
-                        clipped_area(fg, bb) - bb.width * bb.height
-                    ) <= 1e-9 * max(1.0, bb.width * bb.height):
-                        win = ("rect", _Extent(bb.xmin, bb.ymin, bb.xmax, bb.ymax))
+                    if is_rect(fg):
+                        win = ("rect", fg.bbox())
                     else:
                         if (
                             fg.kind != "Polygon"

@@ -23,7 +23,7 @@ import pandas as pd
 
 from ..core.celltype import parse_cell_type
 from ..core.tiles import encode_tiles_batch, paste_tiles
-from ..operators.zonal import feature_tile_keys
+from ..operators.features import feature_key_bounds
 from ..sources.datacube import DataCube
 from .netcdf_format import (
     NcVar,
@@ -166,15 +166,8 @@ def save_samples(cube: DataCube, features, out_dir: str) -> pd.DataFrame:
 
     from pyspark.sql import functions as F
 
-    fkeys = feature_tile_keys(features, ld)
-    # bounds from the feature's FULL key cover (see save_sample_geotiffs):
-    # dropped boundary tiles must not shrink/shift the sample array
-    fbounds = fkeys.groupBy("feature_index").agg(
-        F.min("col").alias("_fc0"), F.max("col").alias("_fc1"),
-        F.min("row").alias("_fr0"), F.max("row").alias("_fr1"),
-    )
-    joined = cube.df.join(F.broadcast(fkeys), ["col", "row"], "inner").join(
-        F.broadcast(fbounds), "feature_index"
+    joined = cube.df.join(
+        F.broadcast(feature_key_bounds(features, ld)), ["col", "row"], "inner"
     )
 
     def write_sample(pdf: pd.DataFrame) -> pd.DataFrame:
