@@ -12,12 +12,15 @@ empty tiles cost ~0 bytes in shuffle/storage.
 
 This module is the only one that knows the byte layout, the float/NaN
 conversion and the EMPTY rule. Everything else works on whole batches
-through two calls:
+through its public entry points:
 
   - :func:`decode_tiles_batch_float` — band lists -> (n, nb, h, w) float64
     with nodata as NaN;
   - :func:`encode_tiles_batch` — (n, nb, h, w) float64 with NaN -> one
-    ``list[bytes]`` per row.
+    ``list[bytes]`` per row;
+  - :func:`encode_tiles_native` — the same from a stack in the cell type's dtype;
+  - :func:`first_valid` / :func:`merge_tiles` — the overlap merge of tiles;
+  - :func:`empty_bands` / :func:`has_data` — the EMPTY marker as Columns.
 
 Large batches are processed in row chunks of at most :data:`CHUNK_ELEMENTS`
 float64 values per temporary (:func:`row_chunks`, :func:`decoded_chunks`),
@@ -29,6 +32,8 @@ from __future__ import annotations
 from typing import Iterator
 
 import numpy as np
+from pyspark.sql import Column
+from pyspark.sql import functions as F
 
 from .celltype import CellType, parse_cell_type
 
@@ -66,9 +71,10 @@ def decoded_chunks(it, cell_type: CellType | str, shape: tuple[int, int], n_band
             )
 
 
-def _encode_native(arr: np.ndarray, ct: CellType) -> list[list[bytes]]:
-    """(n, nb, h, w) array already in ``ct.dtype`` -> per-row band bytes,
-    all-nodata bands -> EMPTY."""
+def encode_tiles_native(arr: np.ndarray, cell_type: CellType | str) -> list[list[bytes]]:
+    """(n, nb, h, w) array already in the cell type's dtype -> per-row band
+    bytes, all-nodata bands -> EMPTY."""
+    ct = _cell_type(cell_type)
     n, nb = arr.shape[:2]
     flat = np.ascontiguousarray(arr).reshape(n * nb, -1)
     if ct.has_nodata:
@@ -83,7 +89,7 @@ def encode_tiles_batch(values: np.ndarray, cell_type: CellType | str) -> list[li
     """Encode a (n, nb, h, w) float64 stack (NaN = nodata) into ``cell_type``:
     one ``list[bytes]`` of nb bands per row."""
     ct = _cell_type(cell_type)
-    return _encode_native(ct.from_float_nan(np.asarray(values, dtype=np.float64)), ct)
+    return encode_tiles_native(ct.from_float_nan(np.asarray(values, dtype=np.float64)), ct)
 
 
 def encode_band(arr: np.ndarray | None, cell_type: CellType | str) -> bytes:
@@ -93,7 +99,7 @@ def encode_band(arr: np.ndarray | None, cell_type: CellType | str) -> bytes:
         return EMPTY
     ct = _cell_type(cell_type)
     a = np.asarray(arr, dtype=ct.dtype)
-    return _encode_native(a.reshape(1, 1, *a.shape), ct)[0][0]
+    return encode_tiles_native(a.reshape(1, 1, *a.shape), ct)[0][0]
 
 
 def decode_band(
@@ -161,12 +167,27 @@ def paste_tiles(
     return out
 
 
+def first_valid(vals: np.ndarray) -> np.ndarray:
+    """Fold a (k, nb, h, w) float stack of k overlapping tiles of one key
+    (NaN = nodata) into (1, nb, h, w): per pixel the first non-nodata value
+    wins (the Geotrellis ``merge`` of overlapping tiles)."""
+    first = np.argmax(~np.isnan(vals), axis=0)
+    return np.take_along_axis(vals, first[None], axis=0)
+
+
 def merge_tiles(
     band_lists, cell_type: CellType | str, shape: tuple[int, int], n_bands: int
 ) -> list[bytes]:
-    """Fold several tiles of one key into one: per pixel the first
-    non-nodata value wins (the Geotrellis ``merge`` of overlapping tiles)."""
+    """:func:`first_valid` over several encoded tiles of one key."""
     vals = decode_tiles_batch_float(list(band_lists), cell_type, shape, n_bands)
-    first = np.argmax(~np.isnan(vals), axis=0)
-    merged = np.take_along_axis(vals, first[None], axis=0)
-    return encode_tiles_batch(merged, cell_type)[0]
+    return encode_tiles_batch(first_valid(vals), cell_type)[0]
+
+
+def empty_bands(n_bands: int) -> Column:
+    """Spark Column: an array of ``n_bands`` EMPTY markers (a missing tile)."""
+    return F.array(*[F.lit(EMPTY) for _ in range(n_bands)])
+
+
+def has_data() -> Column:
+    """Spark predicate: some band of the tile is not EMPTY."""
+    return F.exists("bands", lambda b: b.isNotNull() & (F.length(b) > 0))

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..core.grid import Extent
+from ..core.tiles import decode_tiles_batch_float, encode_tiles_batch, has_data, row_chunks
 from ..sources.datacube import DataCube
 
 
@@ -47,8 +48,6 @@ def crop(cube: DataCube, bbox: Extent) -> DataCube:
     + per-tile masking of pixels outside the bbox (tile geometry unchanged;
     outside pixels -> nodata)."""
     import numpy as np
-
-    from ..core.tiles import decode_tiles_batch_float, encode_tiles_batch, row_chunks
 
     pruned = filter_bbox(cube, bbox)
     ld = cube.meta.layout
@@ -104,9 +103,7 @@ def filter_bands(cube: DataCube, bands: list[str] | list[int]) -> DataCube:
 def filter_empty_tiles(cube: DataCube) -> DataCube:
     """Drop rows where every band is the EMPTY marker
     (filterEmptyTile, OpenEOProcesses.scala:577-579) — a pure SQL exists()."""
-    return cube.with_df(
-        cube.df.where(F.expr("exists(bands, b -> b IS NOT NULL AND length(b) > 0)"))
-    )
+    return cube.with_df(cube.df.where(has_data()))
 
 
 def filter_negative_keys(cube: DataCube) -> DataCube:

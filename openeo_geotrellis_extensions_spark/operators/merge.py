@@ -20,7 +20,9 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from ..core.celltype import cell_type_union, parse_cell_type
-from ..core.tiles import decode_tiles_batch_float, encode_tiles_batch, row_chunks
+from ..core.tiles import (
+    decode_tiles_batch_float, empty_bands, encode_tiles_batch, row_chunks,
+)
 from ..functions.process_compiler import compile_process_graph
 from ..sources.datacube import DataCube
 
@@ -61,12 +63,11 @@ def merge_cubes(a: DataCube, b: DataCube, overlap_resolver: str | dict | None = 
         # band concatenation; missing side padded with EMPTY markers. When the
         # cell types already match the raw buffers pass through untouched.
         if ct_a == ct_b:
-            empty_l = F.array(*[F.lit(b"") for _ in range(na)])
-            empty_r = F.array(*[F.lit(b"") for _ in range(nb)])
             df = joined.select(
                 *keys,
                 F.concat(
-                    F.coalesce("bands_l", empty_l), F.coalesce("bands_r", empty_r)
+                    F.coalesce("bands_l", empty_bands(na)),
+                    F.coalesce("bands_r", empty_bands(nb)),
                 ).alias("bands"),
             )
             return DataCube(df, a.meta).with_meta(

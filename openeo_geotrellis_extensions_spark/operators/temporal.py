@@ -20,7 +20,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from ..core.celltype import parse_cell_type
-from ..core.tiles import decode_tiles_batch_float, encode_tiles_batch
+from ..core.tiles import decode_tiles_batch_float, empty_bands, encode_tiles_batch
 from ..sources.datacube import DataCube, cube_schema
 from .apply_process import _compile, _over_time
 
@@ -86,9 +86,8 @@ def aggregate_temporal(
         keys = cube.df.select("col", "row").distinct()
         lbls = spark.createDataFrame([(l,) for l in labels], ["label"])
         full = keys.crossJoin(F.broadcast(lbls))
-        empty = F.array(*[F.lit(b"") for _ in range(n_bands)])
         reduced = full.join(reduced, ["label", "col", "row"], "left").withColumn(
-            "bands", F.coalesce("bands", empty)
+            "bands", F.coalesce("bands", empty_bands(n_bands))
         )
 
     df = reduced.select(

@@ -32,6 +32,9 @@ from pyspark.sql import functions as F
 
 from ..core.celltype import parse_cell_type
 from ..core.grid import Extent, LayoutDefinition
+from ..core.tiles import (
+    encode_tiles_batch, encode_tiles_native, first_valid, has_data, merge_tiles,
+)
 from ..operators.features import feature_tile_keys
 from .datacube import CubeMeta, DataCube, cube_schema
 from .interleaved import DATES
@@ -150,6 +153,11 @@ def load_collection(
         each asset is OPENED ONCE, emitting per-key fragments, then a second
         grouped stage merges fragments per key in paint order. Best when
         product open cost dominates (remote files, archives)."""
+    if layout.tile_rows != layout.tile_cols:
+        raise ValueError(
+            f"load_collection reads square tiles, got {layout.tile_rows}x"
+            f"{layout.tile_cols}: load on a square layout, then retile()"
+        )
     # 1. catalog pushdown: bbox intersect + time range as Column predicates
     cat = catalog.where(
         (F.col("xmin") < bbox.xmax) & (F.col("xmax") > bbox.xmin)
@@ -184,8 +192,7 @@ def load_collection(
     size = layout.tile_cols
 
     if strategy == "per_product":
-        df = _read_per_product(tasks, layout, n_bands)
-        df = df.where(F.expr("exists(bands, b -> length(b) > 0)"))
+        df = _read_per_product(tasks, layout, n_bands).where(has_data())
         names = tuple(f"B{b}" for b in range(n_bands))
         return DataCube(df, CubeMeta(layout, CATALOG_CELL_TYPE, names, temporal=True))
     if strategy != "per_key":
@@ -201,16 +208,13 @@ def load_collection(
         c = int(pdf["col"].iloc[0])
         r = int(pdf["row"].iloc[0])
         date = pdf["date"].iloc[0]
-        bands_out = []
-        for b in range(n_bands):
-            acc = np.full((size, size), 255, dtype=np.uint8)
-            for p in sorted(pdf["product_index"]):
-                tile = read_window(int(p), c, r, b, size)
-                fill = acc == 255
-                acc[fill] = tile[fill]
-            bands_out.append(acc.tobytes() if (acc != 255).any() else b"")
+        stack = np.array([
+            [read_window(int(p), c, r, b, size) for b in range(n_bands)]
+            for p in sorted(pdf["product_index"])
+        ])
+        bands = encode_tiles_batch(first_valid(ct.to_float_nan(stack)), ct)[0]
         return pd.DataFrame(
-            [(pd.Timestamp(date), c, r, bands_out)],
+            [(pd.Timestamp(date), c, r, bands)],
             columns=["time", "col", "row", "bands"],
         )
 
@@ -218,7 +222,7 @@ def load_collection(
         read_group, schema=cube_schema(True)
     )
     # 5. drop all-nodata tiles (FileLayerProvider.scala:708)
-    df = df.where(F.expr("exists(bands, b -> length(b) > 0)"))
+    df = df.where(has_data())
     names = tuple(f"B{b}" for b in range(n_bands))
     return DataCube(df, CubeMeta(layout, CATALOG_CELL_TYPE, names, temporal=True))
 
@@ -252,7 +256,6 @@ def _read_per_product(tasks: DataFrame, layout: LayoutDefinition, n_bands: int) 
 
         p = int(pdf["product_index"].iloc[0])
         date = pdf["date"].iloc[0]
-        rows = []
         keys = sorted({(int(c), int(r)) for c, r in zip(pdf["col"], pdf["row"])})
         c0 = min(k[0] for k in keys); c1 = max(k[0] for k in keys)
         r0 = min(k[1] for k in keys); r1 = max(k[1] for k in keys)
@@ -261,29 +264,29 @@ def _read_per_product(tasks: DataFrame, layout: LayoutDefinition, n_bands: int) 
         # read + slicing beats per-window reads (one range request vs many)
         if dense_cover_fraction(keys, c0, r0, c1, r1) > READ_FULL_THRESHOLD:
             read_rect = with_retries(product_rect_values)
-            planes = [
+            planes = np.array([
                 read_rect(p, c0, r0, c1 - c0 + 1, r1 - r0 + 1, b, size)
                 for b in range(n_bands)
-            ]
-            for c, r in keys:
-                ro, co = (r - r0) * size, (c - c0) * size
-                bands = [
-                    pl[ro : ro + size, co : co + size].tobytes() for pl in planes
-                ]
-                rows.append((pd.Timestamp(date), c, r, p, bands))
+            ])
+            tiles = np.array([
+                planes[:, (r - r0) * size : (r - r0 + 1) * size,
+                       (c - c0) * size : (c - c0 + 1) * size]
+                for c, r in keys
+            ])
         else:
             # sparse cover: per-key window reads, each retried
             # (FileLayerProvider.scala:68-79)
             read_window = with_retries(product_tile_values)
-            for c, r in keys:
-                bands = [
-                    read_window(p, c, r, b, size).tobytes()
-                    for b in range(n_bands)
-                ]
-                rows.append((pd.Timestamp(date), c, r, p, bands))
-        return pd.DataFrame(
-            rows, columns=["time", "col", "row", "product_index", "bands"]
-        )
+            tiles = np.array([
+                [read_window(p, c, r, b, size) for b in range(n_bands)]
+                for c, r in keys
+            ])
+        return pd.DataFrame({
+            "time": pd.Timestamp(date),
+            "col": [c for c, _ in keys], "row": [r for _, r in keys],
+            "product_index": p,
+            "bands": encode_tiles_native(tiles, CATALOG_CELL_TYPE),
+        })
 
     chunked = tasks.withColumn(
         "_chunk_c", (F.col("col") / chunk_keys).cast("int")
@@ -294,17 +297,10 @@ def _read_per_product(tasks: DataFrame, layout: LayoutDefinition, n_bands: int) 
 
     def merge_key(pdf: pd.DataFrame) -> pd.DataFrame:
         order = pdf.sort_values("product_index")
-        bands_out = []
-        for b in range(n_bands):
-            acc = np.full((size, size), 255, dtype=np.uint8)
-            for bufs in order["bands"]:
-                tile = np.frombuffer(bufs[b], dtype=np.uint8).reshape(size, size)
-                fill = acc == 255
-                acc[fill] = tile[fill]
-            bands_out.append(acc.tobytes() if (acc != 255).any() else b"")
+        bands = merge_tiles(order["bands"], CATALOG_CELL_TYPE, (size, size), n_bands)
         first = pdf.iloc[0]
         return pd.DataFrame(
-            [(first["time"], int(first["col"]), int(first["row"]), bands_out)],
+            [(first["time"], int(first["col"]), int(first["row"]), bands)],
             columns=["time", "col", "row", "bands"],
         )
 

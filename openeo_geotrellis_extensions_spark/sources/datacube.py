@@ -37,7 +37,7 @@ from pyspark.sql.types import (
 
 from ..core.celltype import parse_cell_type
 from ..core.grid import LayoutDefinition
-from ..core.tiles import encode_band
+from ..core.tiles import encode_band, encode_tiles_batch, encode_tiles_native, row_chunks
 from .interleaved import (
     DATES,
     MEDIA_CELL_TYPE,
@@ -176,7 +176,6 @@ def arithmetic_cube(
     dates = DATES if dates is None else dates
     ct = parse_cell_type(cell_type)
     h, w = layout.tile_rows, layout.tile_cols
-    nd = ct.nodata if ct.nodata is not None else 0
 
     def default_fn(d, b, c, r, py, px):
         v = (px * 3 + py * 5 + c * 13 + r * 7 + d * 11 + b * 17) % 97
@@ -198,15 +197,18 @@ def arithmetic_cube(
         px = np.arange(w)[None, :]
         py = np.arange(h)[:, None]
         for pdf in it:
-            out_rows = []
-            for d, c, r in zip(pdf["d"], pdf["col"], pdf["row"]):
-                bands = []
-                for b in range(n_bands):
-                    v = fn(int(d), b, int(c), int(r), py, px)
-                    enc = ct.from_float_nan(np.asarray(v, dtype=np.float64))
-                    bands.append(enc.tobytes())
-                out_rows.append((dates_np[int(d)], int(c), int(r), bands))
-            yield pd.DataFrame(out_rows, columns=["time", "col", "row", "bands"])
+            for s in row_chunks(len(pdf), n_bands, (h, w)):
+                chunk = pdf.iloc[s]
+                ds = chunk["d"].to_numpy()
+                vals = np.empty((len(chunk), n_bands, h, w))
+                for i, (d, c, r) in enumerate(zip(ds, chunk["col"], chunk["row"])):
+                    for b in range(n_bands):
+                        vals[i, b] = fn(int(d), b, int(c), int(r), py, px)
+                yield pd.DataFrame({
+                    "time": dates_np[ds],
+                    "col": chunk["col"].to_numpy(), "row": chunk["row"].to_numpy(),
+                    "bands": encode_tiles_batch(vals, ct),
+                })
 
     df = base.mapInPandas(gen, schema=schema)
     names = tuple(f"band{i}" for i in range(n_bands))
@@ -285,42 +287,24 @@ def media_cube(docs: DataFrame, tile_size: int = 16) -> DataCube:
         docs.sparkSession.sparkContext.defaultParallelism
     )
     schema = cube_schema(temporal=True)
+    nodata = parse_cell_type(MEDIA_CELL_TYPE).nodata
 
     def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # vectorized: all tiles of a batch in one broadcasted numpy expression
-        px = np.arange(tile_size)[None, None, :]
-        py = np.arange(tile_size)[None, :, None]
         for pdf in it:
-            n = len(pdf)
-            if n == 0:
-                continue
-            cs = pdf["col"].to_numpy()[:, None, None]
-            rs = pdf["row"].to_numpy()[:, None, None]
-            ds = pdf["d"].to_numpy()[:, None, None]
-            nodata = (cs + rs + px + py) % 23 == 0
-            out = []
-            tiles_by_band = []
-            for b in (0, 1):
-                v = (cs * 31 + rs * 17 + ds * 11 + b * 7 + py * 5 + px * 3) % 100
-                t = v.astype(np.uint8)
-                t[nodata] = 255
-                tiles_by_band.append(t)
-            # vectorized row assembly: one string->timestamp conversion for
-            # the batch (was a per-row pd.Timestamp) and plain ndarray
-            # iteration for the key columns
-            times = pd.to_datetime(pdf["date"]).to_numpy()
-            cols_np = pdf["col"].to_numpy()
-            rows_np = pdf["row"].to_numpy()
-            h0s = pdf["has_b0"].to_numpy()
-            h1s = pdf["has_b1"].to_numpy()
-            t0, t1 = tiles_by_band
-            for i in range(n):
-                bands = [
-                    t0[i].tobytes() if h0s[i] else b"",
-                    t1[i].tobytes() if h1s[i] else b"",
-                ]
-                out.append((times[i], int(cols_np[i]), int(rows_np[i]), bands))
-            yield pd.DataFrame(out, columns=["time", "col", "row", "bands"])
+            for s in row_chunks(len(pdf), 2, (tile_size, tile_size)):
+                chunk = pdf.iloc[s]
+                c, r, d = (chunk[k].to_numpy()[:, None, None] for k in ("col", "row", "d"))
+                tiles = np.stack(
+                    [media_tile_values(c, r, d, b, tile_size) for b in (0, 1)], axis=1
+                )
+                # a band no doc references is all-nodata, i.e. EMPTY
+                tiles[~chunk["has_b0"].to_numpy(dtype=bool), 0] = nodata
+                tiles[~chunk["has_b1"].to_numpy(dtype=bool), 1] = nodata
+                yield pd.DataFrame({
+                    "time": pd.to_datetime(chunk["date"]).to_numpy(),
+                    "col": chunk["col"].to_numpy(), "row": chunk["row"].to_numpy(),
+                    "bands": encode_tiles_native(tiles, MEDIA_CELL_TYPE),
+                })
 
     df = gen_input.mapInPandas(gen, schema=schema)
     # cheap distinct-times lineage: gen maps keys 1:1, so the cube's

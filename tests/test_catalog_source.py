@@ -37,6 +37,16 @@ def test_load_collection_keys_within_bbox(spark, catalog):
         assert e.intersects(BBOX)
 
 
+@pytest.mark.parametrize("strategy", ["per_key", "per_product"])
+def test_load_collection_rejects_non_square_tiles(catalog, strategy):
+    """Products are read in square tiles; a 8x4 layout must fail up front
+    and name the remedy instead of writing tiles that do not match the
+    cube's tile shape."""
+    layout = LayoutDefinition(Extent(-180.0, -90.0, 180.0, 90.0), 36, 18, 8, 4)
+    with pytest.raises(ValueError, match="retile"):
+        load_collection(catalog, layout, BBOX, n_bands=1, strategy=strategy)
+
+
 def test_load_collection_pixels_match_resolver(spark, catalog):
     """Each tile equals the paint-order merge of its products' reads."""
     cube = load_collection(catalog, LAYOUT, BBOX, n_bands=1)

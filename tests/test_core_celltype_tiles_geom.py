@@ -119,16 +119,26 @@ def test_row_chunks_one_row_when_tile_exceeds_bound():
 
 def test_no_per_row_codec_outside_core():
     """Operators, functions, sinks and plans go through the batch codec:
-    none of them imports the per-row helpers."""
+    none of them imports the per-row helpers. Sources, operators, functions
+    and plans also leave the byte layout and the EMPTY marker to
+    core/tiles.py: no ``.tobytes()`` / ``np.frombuffer`` and no ``b""``."""
     import ast
     import pathlib
 
     import openeo_geotrellis_extensions_spark as pkg
 
     root = pathlib.Path(pkg.__file__).parent
-    banned = {"decode_tile_float", "decode_band", "encode_band"}
+    per_row = {"decode_tile_float", "decode_band", "encode_band"}
+    layout = {"tobytes", "frombuffer", 'b""'}
+    banned = {
+        "sources": layout,
+        "operators": per_row | layout,
+        "functions": per_row | layout,
+        "sinks": per_row,
+        "plans": per_row | layout,
+    }
     offenders = []
-    for sub in ("operators", "functions", "sinks", "plans"):
+    for sub, names_banned in banned.items():
         for path in sorted((root / sub).rglob("*.py")):
             for node in ast.walk(ast.parse(path.read_text())):
                 names = set()
@@ -136,7 +146,11 @@ def test_no_per_row_codec_outside_core():
                     names = {a.name for a in node.names}
                 elif isinstance(node, ast.Attribute):
                     names = {node.attr}
-                offenders += [f"{path.relative_to(root)}: {n}" for n in names & banned]
+                elif isinstance(node, ast.Constant) and node.value == b"":
+                    names = {'b""'}
+                offenders += [
+                    f"{path.relative_to(root)}: {n}" for n in names & names_banned
+                ]
     assert offenders == []
 
 

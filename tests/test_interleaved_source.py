@@ -5,8 +5,11 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from openeo_geotrellis_extensions_spark.core.tiles import EMPTY, decode_band
+from openeo_geotrellis_extensions_spark.sources.datacube import media_cube
 from openeo_geotrellis_extensions_spark.sources.interleaved import (
     DATES,
+    MEDIA_CELL_TYPE,
     doc_attr_sql,
     explode_spans,
     extract_geometries,
@@ -121,6 +124,35 @@ def test_media_ref_parse_and_values(docs):
     assert t.dtype == np.uint8
     # deterministic formula check at a pixel
     assert t[0, 0] in (np.uint8((3 * 31 + 5 * 17 + 11) % 100), np.uint8(255))
+
+
+def test_media_cube_bands_follow_doc_refs(docs):
+    """Every media_cube row: a band some doc references decodes to
+    media_tile_values; a band no doc references is EMPTY."""
+    refs = {
+        (c, rr, DATES.index(date), b)
+        for c, rr, date, b in (
+            parse_tile_ref(r.media_ref)[1:]
+            for r in explode_spans(docs).where("kind = 'media'").collect()
+        )
+    }
+    rows = media_cube(docs, tile_size=16).df.collect()
+    assert {(r.col, r.row, DATES.index(r.time.strftime("%Y-%m-%d"))) for r in rows} == {
+        k[:3] for k in refs
+    }
+    n_empty = 0
+    for r in rows:
+        d = DATES.index(r.time.strftime("%Y-%m-%d"))
+        for b, buf in enumerate(r.bands):
+            if (r.col, r.row, d, b) in refs:
+                np.testing.assert_array_equal(
+                    decode_band(buf, MEDIA_CELL_TYPE, (16, 16)),
+                    media_tile_values(r.col, r.row, d, b, 16),
+                )
+            else:
+                assert buf == EMPTY
+                n_empty += 1
+    assert n_empty > 0
 
 
 def test_synth_is_pure_sql_plan(docs):
